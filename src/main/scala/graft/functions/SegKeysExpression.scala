@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * r, every deduped (segment idx, hypothesized clean length, substring)
   * key of the ±τ-window enumeration — `array<struct<i,l,seg>>` exactly
   * like the Column HOF formulation it replaces
-  * ([[graft.ops.Linkage.dirtySegKeysHof]]).
+  * (`graft.KernelTwins.dirtySegKeysHof`, the spec-side twin).
   *
   * Why a native expression (r18 verdict item 1): the HOF form builds
   * (2τ+1)·(τ+1) `when/transform/sequence/substr` branches per row —
@@ -96,6 +96,12 @@ case class SegKeys(child: Expression, tau: Int,
     bounds: Map[Int, IndexedSeq[Int]])
     extends UnaryExpression with ImplicitCastInputTypes {
   require(tau >= 1, s"tau must be >= 1, got $tau")
+  // the kernel indexes starts(0 until τ+1) unchecked on the executors
+  bounds.foreach { case (len, starts) =>
+    require(starts.length == tau + 1,
+      s"graft_seg_keys bounds entry for length $len has ${starts.length} " +
+        s"segment starts; τ = $tau needs ${tau + 1}")
+  }
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StructType(Seq(

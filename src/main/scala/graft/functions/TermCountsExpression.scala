@@ -8,7 +8,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass per-row term-frequency kernel: tokenize → sort → run-length,
   * emitting `array<struct<term,cnt>>` exactly like the Column HOF
-  * formulation it replaces ([[TextFunctions.termCountsHof]]).
+  * formulation it replaces (`graft.KernelTwins.termCountsHof`, the
+  * spec-side twin).
   *
   * Why a native expression: Catalyst does NOT common-subexpression-
   * eliminate into lambda scopes, so the HOF form's

@@ -184,20 +184,4 @@ object TextFunctions {
     call_function("graft_multi_hits", text,
       lit(patterns.mkString("\u0000")), lit(backend))
   }
-
-  /** The original Column-HOF formulation of [[termCounts]], kept as the
-    * semantic reference the native kernel is spec-pinned against
-    * (TfIdfSpec). NOT for production paths: Catalyst does not CSE into
-    * lambda scopes, so `element_at(srt, i)` re-sorts and re-tokenizes
-    * the document per lambda element — O(n²·log n) per row. */
-  private[graft] def termCountsHof(text: Column): Column = {
-    val srt = array_sort(tokens(text))
-    val n = size(srt)
-    val bounds = filter(sequence(lit(1), n),
-      i => (i === n) || element_at(srt, i) =!= element_at(srt, i + 1))
-    val prevs = concat(array(lit(0)), slice(bounds, lit(1), size(bounds) - 1))
-    when(n <= 0, array().cast("array<struct<term:string,cnt:int>>"))
-      .otherwise(zip_with(bounds, prevs, (b, p) =>
-        struct(element_at(srt, b).as("term"), (b - p).as("cnt"))))
-  }
 }

@@ -35,14 +35,12 @@ object Bucketing {
       buckets: Int): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val loc = tableLoc(spark, name)
+    val fs = locFs(spark, loc)
     if (fs.exists(loc)) fs.delete(loc, true)
     df.write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(name)
-    RefreshEnvelope.recordWrite(spark, name)
   }
 
   /** [[writeBucketed]]'s orphaned-location cleanup for a PLAIN (non-
@@ -51,67 +49,51 @@ object Bucketing {
   def writeTable(df: DataFrame, name: String): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val loc = tableLoc(spark, name)
+    val fs = locFs(spark, loc)
     if (fs.exists(loc)) fs.delete(loc, true)
     df.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(name)
-    RefreshEnvelope.recordWrite(spark, name)
   }
 
-  /** Append rows to a plain (non-bucketed) managed table, recording the
-    * maintenance write — the lifecycle-aware twin of a bare
-    * `write.mode(Append).saveAsTable`. Every side-table append in the
-    * index family (BM25 `_docs`/`_stats`) goes through here so the
-    * [[RefreshEnvelope]] counter covers the WHOLE static family a
-    * streaming probe plans in, not just the bucketed base. */
-  def appendTable(df: DataFrame, name: String): Unit = {
-    df.write.mode(SaveMode.Append).format("parquet").saveAsTable(name)
-    RefreshEnvelope.recordWrite(df.sparkSession, name)
+  /** Append rows to an existing table: the data half of a lifecycle
+    * append, with no log step of its own (the lifecycle op around it
+    * commits — see [[IndexLog]]). `bucketed` = the table's (key, bucket
+    * count); Spark validates it against the table's spec. */
+  def appendTable(df: DataFrame, name: String,
+      bucketed: Option[(String, Int)] = None): Unit = {
+    val w = df.write.mode(SaveMode.Append)
+    bucketed.fold(w) { case (key, n) => w.bucketBy(n, key).sortBy(key) }
+      .format("parquet").saveAsTable(name)
   }
 
-  // ---- compact staging (r18: crash-convergent compaction) ------------
-  // Compaction is the one lifecycle op that REWRITES files, and before
-  // r18 it did so destructively: the live rows were materialized into
-  // block-manager memory (localCheckpoint — lost with the JVM, and at
-  // 100 TB a compact should not need the index resident in memory at
-  // all), then [[writeBucketed]] DROPPED the base and deleted its
-  // directory before writing the replacement. A crash in that window
-  // destroyed the index outright (the only copy of the live rows died
-  // with the process), and a crash between the base rewrite and the
-  // `_del` truncate lost re-inserted keys PERMANENTLY on retry: the
-  // gen-0 rewritten rows of previously-deleted-then-revived keys read
-  // as suppressed under the still-present tombstones, so the retry's
-  // live view excluded them. r18 makes every compact CRASH-CONVERGENT
-  // with the same single-maintainer retry contract the r17 delete
-  // machinery established (retry-after-failure by the same maintainer
-  // is INSIDE the contract):
+  // ---- compact staging (crash-convergent compaction) -----------------
+  // Compaction is the one lifecycle op that REWRITES files. Every compact
+  // runs the same staged protocol on the index's [[IndexLog]]:
   //
-  //   1. the live rows are first written to a DURABLE staging table
-  //      (`<name>__compact`) next to the base — an out-of-core
-  //      file→file copy, nothing pinned in executor or block-manager
-  //      memory — and a protocol-tagged marker file commits the
-  //      snapshot atomically;
-  //   2. only then do the destructive steps run, in an order where
-  //      every crash point rolls FORWARD on retry: `_del` truncates
-  //      first (so the staged gen-0 rows can never be suppressed by
-  //      leftover tombstones), then the base rewrites FROM THE STAGED
-  //      FILES (still on disk whatever died), then the staging drops
-  //      (marker first, so a half-deleted staging never reads as
-  //      committed).
+  //   1. the live rows are written to a DURABLE staging table
+  //      (`<name>__compact`, plus `__compact_docs`/`__compact_stats` for
+  //      the BM25 family) next to the base — an out-of-core file→file
+  //      copy — and the log commits the compact as in flight, tagged
+  //      with its protocol;
+  //   2. only then do the destructive steps run, in an order where every
+  //      crash point rolls FORWARD on retry: `_del` truncates first (so
+  //      the staged gen-0 rows can never be suppressed by leftover
+  //      tombstones), then the base rewrites FROM THE STAGED FILES
+  //      (still on disk whatever died);
+  //   3. the log commits the compact done (generation 0 once `_del` is
+  //      truncated), and the stagings drop — after the commit, so a
+  //      half-deleted staging never backs an in-flight compact.
   //
-  // A retry entering compact with a committed marker skips the
-  // snapshot and replays step 2 verbatim — idempotent. Because a
-  // committed-but-unapplied snapshot goes stale the moment any other
-  // lifecycle write lands, [[appendBucketed]] and [[tombstoneAppend]]
-  // fail loudly while one is pending (roll it forward first by
-  // re-running the named compact); a REBUILD supersedes the pending
-  // compact instead — [[initTombstones]], which every index build runs
-  // first, discards stale stagings. The marker carries which protocol
-  // staged it so a crashed [[tombstoneCompact]] (which must truncate
-  // `_del`) cannot be rolled forward by [[compactBucketed]] (which
-  // must not).
-  private val StagedMarker = "_GRAFT_STAGED"
+  // A retry entering compact with its compact in flight skips the
+  // snapshot and replays step 2 verbatim — idempotent. A staging left by
+  // a crash before step 1's commit is garbage the next snapshot
+  // overwrites. Because a staged snapshot goes stale the moment any other
+  // lifecycle write lands, every other lifecycle op refuses while one is
+  // in flight ([[pendingError]]); a REBUILD supersedes it instead
+  // ([[initTombstones]], which every index build runs first). The
+  // protocol tag keeps a crashed [[tombstoneCompact]] (which must
+  // truncate `_del`) from being rolled forward by [[compactBucketed]]
+  // (which must not).
 
   /** The staging-table name a compact of `name` snapshots into. */
   private[graft] def compactStagingName(name: String): String =
@@ -125,103 +107,118 @@ object Bucketing {
   private def locFs(spark: SparkSession, loc: org.apache.hadoop.fs.Path) =
     loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The protocol tag of a COMMITTED staging snapshot ("tombstone",
-    * "layout", "bm25"), or None if no committed snapshot exists. */
-  private[graft] def stagedProtocol(spark: SparkSession,
-      stagingName: String): Option[String] = {
-    val marker = new org.apache.hadoop.fs.Path(
-      tableLoc(spark, stagingName), StagedMarker)
-    val fs = locFs(spark, marker)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      try {
-        val buf = new Array[Byte](64)
-        val n = math.max(0, in.read(buf))
-        Some(new String(buf, 0, n,
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-      } finally in.close()
-    }
-  }
-
-  /** Atomically commit a freshly written staging snapshot: one tiny
-    * marker file inside the staging directory (underscore-prefixed, so
-    * parquet readers ignore it). Until the marker exists the staging
-    * is garbage and a fresh compact overwrites it. */
-  private[graft] def commitStaging(spark: SparkSession, stagingName: String,
-      protocol: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(
-      tableLoc(spark, stagingName), StagedMarker)
-    val out = locFs(spark, marker).create(marker, true)
-    try out.write(protocol.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Remove a staging snapshot: MARKER FIRST (atomic retract — a crash
-    * mid-cleanup must not leave a half-deleted directory that still
-    * reads as committed), then the catalog entry, directory, and the
-    * staging table's envelope counter file. */
+  /** Remove a staging table: catalog entry and directory. */
   private[graft] def dropStaging(spark: SparkSession,
       stagingName: String): Unit = {
     val loc = tableLoc(spark, stagingName)
-    val fs = locFs(spark, loc)
-    val marker = new org.apache.hadoop.fs.Path(loc, StagedMarker)
-    if (fs.exists(marker)) fs.delete(marker, false)
     spark.sql(s"DROP TABLE IF EXISTS `$stagingName`")
+    val fs = locFs(spark, loc)
     if (fs.exists(loc)) fs.delete(loc, true)
-    RefreshEnvelope.clearCounter(spark, stagingName)
   }
 
-  /** The rows of a committed staging snapshot — through the catalog
-    * when this process wrote it, from the parquet files when a
-    * restarted process (with a persistent metastore or after
-    * re-registration) rolls the compact forward. */
+  /** The rows of a staging snapshot — through the catalog when this
+    * process wrote it, from the parquet files when a restarted process
+    * (with a persistent metastore or after re-registration) rolls the
+    * compact forward. */
   private[graft] def stagingRows(spark: SparkSession,
       stagingName: String): DataFrame =
     if (spark.catalog.tableExists(stagingName)) spark.table(stagingName)
     else spark.read.parquet(tableLoc(spark, stagingName).toString)
 
-  /** Loud stale-snapshot guard for lifecycle WRITES: a committed
-    * staging snapshot captures the live view as of its compact's start,
-    * so any append or delete landing before the roll-forward completes
-    * would be silently erased when the staged rows replace the base.
-    * Refuse instead, naming the remedy. */
-  private[graft] def assertNoPendingCompact(spark: SparkSession,
-      tableName: String, op: String): Unit =
-    stagedProtocol(spark, compactStagingName(tableName)).foreach { p =>
-      val entry = p match {
-        case "layout" => "compactBucketed"
-        case "bm25" => "searchIndexCompact"
-        case _ => "tombstoneCompact (or the index family's compact)"
-      }
-      throw new IllegalStateException(
-        s"$op($tableName): a crashed compact left a committed staging " +
-          s"snapshot (${compactStagingName(tableName)}) — roll it " +
-          s"forward to completion first by re-running $entry, or " +
-          "rebuild the index (which discards the pending compact); " +
+  /** The compact that stages under `protocol`. */
+  private def compactOp(protocol: String): String = protocol match {
+    case "layout" => "compactBucketed"
+    case "bm25" => "searchIndexCompact"
+    case _ => "tombstoneCompact"
+  }
+
+  /** The loud refusal of lifecycle op `doing` while `op` — a crashed
+    * operation — is in flight on `log`'s index, naming the remedy: a
+    * staged compact must roll forward (writing now would be silently
+    * erased when the staged rows replace the base); a partial BM25
+    * delete or append must be retried to completion (interleaving would
+    * make both unrecoverable). */
+  private[graft] def pendingError(log: IndexLog, op: IndexLog.Op,
+      doing: String): IllegalStateException =
+    new IllegalStateException(s"$doing(${log.index}): " + (op match {
+      case IndexLog.Op("compact", _, p) =>
+        s"a crashed compact left a committed staging snapshot ('$p' " +
+          s"protocol) — roll it forward to completion first by re-running " +
+          s"${compactOp(p)} (or the index family's compact that wraps it), " +
+          "or rebuild the index (which discards the pending compact); " +
           "writing now would be silently erased when the staged rows " +
-          "replace the base (single-maintainer contract, see " +
-          "graft.ops.Bucketing)")
-    }
+          "replace the base"
+      case IndexLog.Op("delete", _, _) =>
+        s"a PRIOR delete at sequence ${log.gen} left a partial retraction " +
+          "(its stats row may have landed, its tombstones are not " +
+          "committed) — retry that delete to completion (or rebuild) " +
+          "first; rows appended now would be stamped below the delete's " +
+          "sequence, a different delete or a compact would skew the " +
+          "corpus stats for every score"
+      case IndexLog.Op(_, id, _) =>
+        s"a prior append left a partial state (batch $id begun, not " +
+          "committed) — retry that append to completion first; " +
+          "interleaving would make both unrecoverable"
+    }) + " (see graft.ops.IndexLog)")
+
+  /** Throw [[pendingError]] if any operation is in flight on `log`. */
+  private[graft] def refusePending(log: IndexLog, doing: String): Unit =
+    log.pending.foreach(op => throw pendingError(log, op, doing))
 
   /** Append rows to an existing bucketed table written by
     * [[writeBucketed]] (same key + bucket count — Spark validates the
-    * spec matches). Each append adds one file per non-empty bucket;
-    * reads stay `Bucketed: true` with the partitioning intact, so
-    * downstream co-located joins keep their zero-Exchange shape. This is
-    * the incremental-maintenance path for persisted ANN indexes
-    * ([[Similarity.lshIndexBuild]]/ivfIndexBuild): new corpus batches
-    * append their signatures instead of rebuilding the index — at 100 TB
-    * a rebuild rewrites everything, an append writes only the delta.
-    * (Periodic compaction = one [[writeBucketed]] over the table when
-    * per-bucket file counts grow.) */
+    * spec matches) as one step on the table's [[IndexLog]]. Each append
+    * adds one file per non-empty bucket; reads stay `Bucketed: true`
+    * with the partitioning intact, so downstream co-located joins keep
+    * their zero-Exchange shape. This is the incremental-maintenance path
+    * for persisted ANN indexes ([[Similarity.lshIndexBuild]]/
+    * ivfIndexBuild): new corpus batches append their signatures instead
+    * of rebuilding the index — at 100 TB a rebuild rewrites everything,
+    * an append writes only the delta. (Periodic compaction =
+    * [[compactBucketed]] when per-bucket file counts grow.) */
   def appendBucketed(df: DataFrame, name: String, key: String,
-      buckets: Int): Unit = {
-    assertNoPendingCompact(df.sparkSession, name, "appendBucketed")
-    df.write.mode(SaveMode.Append)
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet").saveAsTable(name)
-    RefreshEnvelope.recordWrite(df.sparkSession, name)
+      buckets: Int): Unit =
+    appendStep(df.sparkSession, name, key, buckets)(_ => df)
+
+  /** [[appendBucketed]] for tombstone-capable index rows: stamped with
+    * the generation of the log head the append commits on, so a
+    * deleted-then-re-appended key is live again from this append on
+    * while its stale pre-delete rows stay suppressed. A pure file
+    * append — safe under a running streaming probe. */
+  def appendAtGen(df: DataFrame, name: String, key: String,
+      buckets: Int): Unit =
+    appendStep(df.sparkSession, name, key, buckets)(withGen(df, _))
+
+  private def appendStep(spark: SparkSession, name: String, key: String,
+      buckets: Int)(rows: Long => DataFrame): Unit = {
+    val log = IndexLog(spark, name)
+    refusePending(log, "appendBucketed")
+    log.commit(wrote = Seq(""))
+    appendTable(rows(log.gen), name, Some((key, buckets)))
+  }
+
+  /** The staged compact protocol (section above) on `log`'s index:
+    * `stage` writes the staging snapshot, `apply` runs the destructive
+    * steps from it and returns the live row count. The done-commit
+    * records a write on each family table suffix in `wrote` and resets
+    * the generation unless the protocol only re-lays-out ("layout");
+    * `stagings` drop after it. */
+  private[graft] def stagedCompact(log: IndexLog, protocol: String,
+      wrote: Seq[String], stagings: Seq[String])(stage: => Unit)(
+      apply: => Long): Long = {
+    log.pending match {
+      case None =>
+        stage
+        log.commit(op = Some(IndexLog.Op("compact", 0L, protocol)))
+      case Some(IndexLog.Op("compact", _, p)) if p == protocol =>
+        System.err.println(
+          s"[graft] ${log.index}: rolling forward a previously staged compact")
+      case Some(op) => throw pendingError(log, op, compactOp(protocol))
+    }
+    val n = apply
+    log.commit(gen = if (protocol == "layout") log.gen else 0L, wrote = wrote)
+    stagings.foreach(dropStaging(log.spark, _))
+    n
   }
 
   /** Rewrite a bucketed table in place, collapsing the one-file-per-
@@ -229,40 +226,22 @@ object Bucketing {
     * bucket. Same data, same layout contract, minimal file count — run
     * it when per-bucket file counts degrade scan/merge performance
     * (each bucket file is a separate sorted run for the SMJ reader).
-    * Returns the row count rewritten.
-    *
-    * CRASH-CONVERGENT (r18 — see the staging section above): the rows
-    * are copied to a durable staging table first, then the base
-    * rewrites from the staged files — an out-of-core file→file copy
-    * (the pre-r18 localCheckpoint held the whole table in
-    * block-manager memory, and a crash between the base DROP and the
-    * rewrite destroyed the table: the only copy died with the JVM).
-    * Retrying after a failure rolls the staged snapshot forward. */
+    * Returns the row count rewritten. CRASH-CONVERGENT: the staged
+    * protocol (section above) under the "layout" tag. */
   def compactBucketed(spark: SparkSession, name: String, key: String,
       buckets: Int): Long = {
     val stg = compactStagingName(name)
-    stagedProtocol(spark, stg) match {
-      case None =>
-        // the staging is a PLAIN table (see [[stageTombstoneCompact]] —
-        // a bucketed staging would let the planner elide the rewrite's
-        // repartition and fragment the layout)
-        writeTable(spark.table(name), stg)
-        commitStaging(spark, stg, "layout")
-      case Some("layout") => System.err.println(
-        s"[graft] $name: rolling forward a previously staged compact")
-      case Some(other) => throw new IllegalStateException(
-        s"compactBucketed($name): the pending staging snapshot was " +
-          s"written by the '$other' protocol — roll it forward with the " +
-          "compact that staged it (tombstoneCompact / the index " +
-          "family's compact) or rebuild the table")
+    // the staging is a PLAIN table (see [[stageLive]] — a bucketed
+    // staging would let the planner elide the rewrite's repartition and
+    // fragment the layout)
+    stagedCompact(IndexLog(spark, name), "layout", Seq(""), Seq(stg))(
+      writeTable(spark.table(name), stg)) {
+      writeBucketed(
+        stagingRows(spark, stg)
+          .repartition(buckets, org.apache.spark.sql.functions.col(key)),
+        name, key, buckets)
+      spark.table(name).count()
     }
-    writeBucketed(
-      stagingRows(spark, stg)
-        .repartition(buckets, org.apache.spark.sql.functions.col(key)),
-      name, key, buckets)
-    val n = spark.table(name).count()
-    dropStaging(spark, stg)
-    n
   }
 
   // STATIC-SIDE REFRESH ENVELOPE under a RUNNING STREAM (r16, measured
@@ -281,38 +260,30 @@ object Bucketing {
   // file scans carry no bucket metadata, so every streaming probe's
   // static side would gain a per-batch Exchange of the (corpus-sized)
   // index, destroying the zero-index-Exchange property the layout is
-  // built on to keep one maintenance-pickup edge case.
+  // built on to keep one maintenance-pickup edge case. The envelope is
+  // ENFORCED at runtime: every lifecycle step counts its family-table
+  // writes in the index's [[IndexLog]], and [[RefreshEnvelope.Guard]]
+  // turns "this stream sailed past its envelope" into a loud warning, a
+  // sticky flag, and a fail-fast assertion.
   //
-  // r17: the envelope is ENFORCED AT RUNTIME, not just documented —
-  // every write path here bumps a persisted per-table counter, and
-  // [[RefreshEnvelope.capture]]/[[RefreshEnvelope.Guard]] turn "this
-  // stream sailed past its envelope" into a loud warning, a sticky
-  // flag, and a fail-fast assertion (StreamingSpec pins the second
-  // post-start write tripping it).
-  //
-  // SINGLE-MAINTAINER CONTRACT (r17, pinned in LayoutBucketingSpec):
-  // every MUTATING lifecycle op — build, append, delete, compact, and
-  // the [[RefreshEnvelope]] counter bump — assumes ONE maintainer
-  // process per index at a time, the industry norm for index
-  // maintenance. [[currentGen]] is read-then-append with no
-  // coordination BY DESIGN: two concurrent [[tombstoneAppend]]s would
-  // read the same generation and stamp the SAME sequence, and an
-  // append racing a delete gets an ordering neither caller chose —
-  // both are OUTSIDE the contract, not failure modes within it.
-  // Retry-after-failure by the same maintainer is INSIDE the contract,
-  // and as of r18 EVERY multi-write lifecycle op honors it: the BM25
-  // delete via its seq-stamped retraction
-  // ([[graft.ops.TfIdf.searchIndexDelete]], r17), the BM25 append via
-  // its pending-marker file + gen-salted batch digest
-  // ([[graft.ops.TfIdf.searchIndexAppend]]), and every compact via the
-  // durable staged roll-forward protocol (the staging section above) —
-  // single-table appends and builds were always atomic-at-job-commit /
-  // overwrite-idempotent respectively. Concurrent READERS — probes,
-  // guards, streams — are
-  // unrestricted: every op short of compact is a pure append, and
-  // compact is restart-fenced. Cross-SESSION isolation (two apps, two
-  // different indexes, one warehouse) is separately guaranteed by the
-  // app-id-suffixed staging names in [[bucketedJoin]].
+  // CONCURRENT MAINTAINERS are DETECTED, not excluded by contract: every
+  // mutating lifecycle op — build, append, delete, compact — reads its
+  // index's log head once and commits the next version before its data
+  // writes, so of two maintainers that read the same head exactly one
+  // commits and the other fails with [[IndexLog.ConflictException]]
+  // having written nothing (LayoutBucketingSpec pins two deletes).
+  // Retry-after-failure converges for every multi-write op: the BM25
+  // delete and append via their in-flight log entries plus the `_stats`
+  // (seq, del_sig) rows and gen-matched existence probes
+  // ([[graft.ops.TfIdf.searchIndexDelete]] /
+  // [[graft.ops.TfIdf.searchIndexAppend]]), and every compact via the
+  // staged roll-forward protocol (the staging section above) — single-
+  // table appends and builds are atomic-at-job-commit / overwrite-
+  // idempotent respectively. Concurrent READERS — probes, guards,
+  // streams — are unrestricted: every op short of compact is a pure
+  // append, and compact is restart-fenced. Cross-SESSION isolation (two
+  // apps, two different indexes, one warehouse) is separately guaranteed
+  // by the app-id-suffixed staging names in [[bucketedJoin]].
   //
   // ---- tombstone lifecycle (r15; generation-stamped r16) -------------
   // Shared by every persisted index that supports retraction (the
@@ -335,7 +306,7 @@ object Bucketing {
   // row (r15 ADVICE).
 
   /** The generation column stamped onto tombstone-capable index rows —
-    * see [[withGen]] / [[currentGen]]. [[liveView]] consumes and drops
+    * see [[withGen]] / [[IndexLog.gen]]. [[liveView]] consumes and drops
     * it, so probe schemas never see it. */
   val GenCol = "_gen"
 
@@ -375,39 +346,35 @@ object Bucketing {
   private val tombObsId = new java.util.concurrent.atomic.AtomicLong()
 
   /** Stamp `df` with the generation its rows are written under: 0 at
-    * build time, [[currentGen]] at append time (an append's rows must
-    * outlive every delete issued before the append — and no delete
-    * issued after it, which [[tombstoneAppend]] guarantees by stamping
-    * deletes one PAST the current generation). */
+    * build time, the log's generation at append time ([[appendAtGen]] —
+    * an append's rows must outlive every delete issued before the
+    * append, and no delete issued after it, which [[tombstoneAppend]]
+    * guarantees by stamping deletes one PAST the current generation). */
   def withGen(df: DataFrame, gen: Long): DataFrame =
     df.withColumn(GenCol, org.apache.spark.sql.functions.lit(gen))
 
-  /** The index's current generation = latest delete sequence in its
-    * `_del` table (0 when nothing was ever deleted). One tiny aggregate
-    * over the small-by-contract delete table; index APPENDS read it to
-    * stamp their rows. */
-  def currentGen(spark: SparkSession, tableName: String): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, max}
-    if (!spark.catalog.tableExists(tableName + "_del")) 0L
-    else spark.table(tableName + "_del")
-      .agg(coalesce(max("seq"), lit(0L))).first().getLong(0)
-  }
-
-  /** Create an EMPTY tombstone table alongside a fresh index build.
-    * Always materializing it (rather than creating lazily on the first
-    * delete) is load-bearing for STREAMING probes: a stream plans the
-    * [[liveView]] join at definition time, so the `_del` table must
+  /** Begin a fresh index build: commit the built state on the index's
+    * log (generation 0, nothing in flight, one write on the base, `_del`
+    * and each of `sideTables` — suffixes of the family tables the build
+    * writes besides those two) and create an EMPTY tombstone table.
+    * Every index build calls this before writing its base.
+    *
+    * Always materializing `_del` (rather than creating lazily on the
+    * first delete) is load-bearing for STREAMING probes: a stream plans
+    * the [[liveView]] join at definition time, so the `_del` table must
     * exist then for a later mid-stream delete to take effect — appends
     * to an existing static table re-resolve per micro-batch, a table
     * that appears mid-stream does not. Also discards any stale
     * tombstones of a previous same-name index. */
   def initTombstones(keySchema: DataFrame, keyCol: String,
-      tableName: String): Unit = {
-    // a REBUILD supersedes any pending (crashed) compact of the same
-    // index: discard committed-but-unapplied staging snapshots, or a
-    // later compact would roll the pre-rebuild rows forward over the
-    // fresh build (r18 — the staging contract's escape hatch)
+      tableName: String, sideTables: String*): Unit = {
+    // a REBUILD supersedes any in-flight (crashed) operation of the same
+    // index: the commit retracts it, then its stagings drop — a later
+    // compact must never roll the pre-rebuild rows forward over the
+    // fresh build
     val spark = keySchema.sparkSession
+    IndexLog(spark, tableName).commit(gen = 0L,
+      wrote = Seq("", "_del") ++ sideTables)
     Seq("__compact", "__compact_docs", "__compact_stats")
       .foreach(s => dropStaging(spark, tableName + s))
     truncateTombstones(keySchema, keyCol, tableName)
@@ -428,31 +395,35 @@ object Bucketing {
       tableName + "_del")
 
   /** Append retracted keys to the tombstone table at the NEXT delete
-    * sequence (created if a legacy index predates [[initTombstones]] —
-    * such an index's rows have no [[GenCol]] and read as generation 0,
-    * i.e. every delete suppresses them, the r15 anti-join semantics).
-    * Within-batch duplicates are collapsed; re-deleting an
-    * already-tombstoned key appends one fresh (key, seq) row — the
-    * delete table stays delete-volume-sized and [[liveView]] folds to
-    * one broadcast key either way.
-    *
-    * `atSeq` (optional) lets a delete with MORE THAN ONE side effect
-    * pre-claim its sequence via [[currentGen]]+1 and stamp every side
-    * table with it before the tombstones land — the retry-detection
-    * handle for multi-table deletes (see
-    * [[graft.ops.TfIdf.searchIndexDelete]]: the stats retraction row
-    * carries the seq, so a retry after a partial failure can tell an
-    * already-applied retraction from a missing one). */
+    * sequence, committed on the index's log first (created if a legacy
+    * index predates [[initTombstones]] — such an index's rows have no
+    * [[GenCol]] and read as generation 0, i.e. every delete suppresses
+    * them, the r15 anti-join semantics). Within-batch duplicates are
+    * collapsed; re-deleting an already-tombstoned key appends one fresh
+    * (key, seq) row — the delete table stays delete-volume-sized and
+    * [[liveView]] folds to one broadcast key either way. */
   def tombstoneAppend(delKeys: DataFrame, keyCol: String,
-      tableName: String, atSeq: Long = -1L): Unit = {
-    import org.apache.spark.sql.functions.lit
-    val spark = delKeys.sparkSession
-    assertNoPendingCompact(spark, tableName, "tombstoneAppend")
-    val seq = if (atSeq > 0L) atSeq else currentGen(spark, tableName) + 1L
+      tableName: String): Unit =
+    tombstoneAppend(delKeys, keyCol, IndexLog(delKeys.sparkSession, tableName))
+
+  /** [[tombstoneAppend]] on an already-read log head: if another
+    * maintainer committed since `log` was read, this delete fails with
+    * [[IndexLog.ConflictException]] before writing a tombstone. */
+  def tombstoneAppend(delKeys: DataFrame, keyCol: String,
+      log: IndexLog): Unit = {
+    refusePending(log, "tombstoneAppend")
     // eager: the caller may derive the delete set from the index itself
-    val del = delKeys.select(keyCol).distinct()
-      .withColumn("seq", lit(seq)).localCheckpoint(true)
-    if (spark.catalog.tableExists(tableName + "_del"))
+    val del = delKeys.select(keyCol).distinct().localCheckpoint(true)
+    val seq = log.gen + 1L
+    log.commit(gen = seq, wrote = Seq("_del"))
+    writeTombstones(del, log.index, seq)
+  }
+
+  /** The data half of a delete: `keys` tombstoned at sequence `seq`. */
+  private[graft] def writeTombstones(keys: DataFrame, tableName: String,
+      seq: Long): Unit = {
+    val del = keys.withColumn("seq", org.apache.spark.sql.functions.lit(seq))
+    if (keys.sparkSession.catalog.tableExists(tableName + "_del"))
       appendTable(del, tableName + "_del")
     else writeTable(del, tableName + "_del")
   }
@@ -501,34 +472,47 @@ object Bucketing {
     * together, so liveness is unchanged by construction. The ONLY
     * lifecycle op that rewrites files — run it without a live stream
     * over the same index (the [[compactBucketed]] rule). Returns the
-    * live row count.
-    *
-    * CRASH-CONVERGENT (r18 — see the staging section above): the live
-    * rows land in a durable staging snapshot before anything
-    * destructive runs, `_del` truncates BEFORE the base rewrite (staged
-    * rows are generation 0 — leftover tombstones would suppress
-    * re-inserted keys), and the base rewrites from the staged FILES.
-    * Retrying after a failure at any point rolls the staged snapshot
-    * forward; nothing is ever held only in process memory. */
+    * live row count. CRASH-CONVERGENT: the staged protocol (section
+    * above) under the "tombstone" tag. */
   def tombstoneCompact(spark: SparkSession, tableName: String,
+      keyCol: String, bucketKey: String, buckets: Int): Long =
+    stagedCompact(IndexLog(spark, tableName), "tombstone", Seq("", "_del"),
+      Seq(compactStagingName(tableName)))(
+      stageLive(spark, tableName, keyCol))(
+      foldStaged(spark, tableName, keyCol, bucketKey, buckets))
+
+  /** The snapshot half of [[tombstoneCompact]], committed: package-
+    * visible so LifecycleRecoverySpec can replay the crash window
+    * between the snapshot and the destructive steps. */
+  private[graft] def stageTombstoneCompact(spark: SparkSession,
+      tableName: String, keyCol: String): Unit = {
+    val log = IndexLog(spark, tableName)
+    stageLive(spark, tableName, keyCol)
+    log.commit(op = Some(IndexLog.Op("compact", 0L, "tombstone")))
+  }
+
+  /** Write the live view at generation 0 to the staging table. The
+    * staging is a PLAIN parquet table, deliberately not bucketed: a
+    * bucketed staging's bucket spec lets the planner elide the final
+    * rewrite's repartition while bin-packing the actual scan —
+    * mixed-bucket write tasks, fragmenting the one-file-per-bucket
+    * layout contract. A plain staging forces the real shuffle on the
+    * rewrite. */
+  private[graft] def stageLive(spark: SparkSession, tableName: String,
+      keyCol: String): Unit =
+    writeTable(withGen(liveView(spark, tableName, keyCol), 0L),
+      compactStagingName(tableName))
+
+  /** The destructive steps of a tombstone compact, every one idempotent
+    * and replayed verbatim by a retry: truncate the tombstones FIRST,
+    * then rewrite the base from the durable staging. The truncate's
+    * schema source falls back to the staging when `_del` is missing (a
+    * retry after a crash inside a previous truncate's drop-then-write —
+    * the table must come back: eager `_del` existence is load-bearing
+    * for streaming probes). Returns the live row count. */
+  private[graft] def foldStaged(spark: SparkSession, tableName: String,
       keyCol: String, bucketKey: String, buckets: Int): Long = {
     val stg = compactStagingName(tableName)
-    stagedProtocol(spark, stg) match {
-      case None => stageTombstoneCompact(spark, tableName, keyCol)
-      case Some("tombstone") => System.err.println(
-        s"[graft] $tableName: rolling forward a previously staged compact")
-      case Some(other) => throw new IllegalStateException(
-        s"tombstoneCompact($tableName): the pending staging snapshot " +
-          s"was written by the '$other' protocol — roll it forward with " +
-          "the compact that staged it (compactBucketed for 'layout', " +
-          "searchIndexCompact for 'bm25') or rebuild the index")
-    }
-    // COMMIT — every step idempotent from here, replayed verbatim by a
-    // retry: truncate the tombstones FIRST, then rewrite the base from
-    // the durable staging. The truncate's schema source falls back to
-    // the staging when `_del` is missing (a retry after a crash inside
-    // a previous truncate's drop-then-write — the table must come back:
-    // eager `_del` existence is load-bearing for streaming probes).
     val delSrc = if (spark.catalog.tableExists(tableName + "_del"))
       spark.table(tableName + "_del") else stagingRows(spark, stg)
     truncateTombstones(delSrc, keyCol, tableName)
@@ -536,25 +520,7 @@ object Bucketing {
       stagingRows(spark, stg)
         .repartition(buckets, org.apache.spark.sql.functions.col(bucketKey)),
       tableName, bucketKey, buckets)
-    val n = spark.table(tableName).count()
-    dropStaging(spark, stg)
-    n
-  }
-
-  /** The snapshot half of [[tombstoneCompact]]: write the live view to
-    * the durable staging table and commit the marker. The staging is a
-    * PLAIN parquet table, deliberately not bucketed: a bucketed
-    * staging's bucket spec lets the planner elide the final rewrite's
-    * repartition while bin-packing the actual scan — mixed-bucket write
-    * tasks, fragmenting the one-file-per-bucket layout contract. A
-    * plain staging forces the real shuffle on the rewrite.
-    * Package-visible so LifecycleRecoverySpec can replay the crash
-    * window between the snapshot and the commit steps. */
-  private[graft] def stageTombstoneCompact(spark: SparkSession,
-      tableName: String, keyCol: String): Unit = {
-    val stg = compactStagingName(tableName)
-    writeTable(withGen(liveView(spark, tableName, keyCol), 0L), stg)
-    commitStaging(spark, stg, "tombstone")
+    spark.table(tableName).count()
   }
 
   /** Advise→act (r18 — the r17 verdict's item 4): run
@@ -563,10 +529,10 @@ object Bucketing {
     * [[liveView]] reports as the `compact_advised` observed metric, so
     * a maintenance job can close the advisory loop with one call
     * instead of scraping metrics. Returns Some(live row count) when it
-    * compacted, None when compaction is not (yet) advised. A pending
-    * crashed compact (committed staging snapshot — r18) outranks the
-    * threshold: the call rolls it forward regardless of the tombstone
-    * count, since lifecycle writes are refusing until it completes.
+    * compacted, None when compaction is not (yet) advised. A crashed
+    * compact still in flight on the index's log outranks the threshold:
+    * the call rolls it forward regardless of the tombstone count, since
+    * lifecycle writes are refusing until it completes.
     *
     * Restart-fenced like compact itself, but ENFORCED rather than
     * documented: compaction is the one lifecycle op that rewrites
@@ -576,8 +542,7 @@ object Bucketing {
     * topology of many streams over many indexes is not blocked by an
     * unrelated stream; a query whose plan cannot be inspected counts
     * as offending, conservatively). Streams in OTHER processes are
-    * outside this fence and covered by the single-maintainer contract
-    * above, exactly as for a manual [[tombstoneCompact]].
+    * outside this fence, exactly as for a manual [[tombstoneCompact]].
     *
     * Indexes whose compact must ALSO fold side tables pass their
     * family compact via `compact` (e.g.
@@ -589,12 +554,8 @@ object Bucketing {
   def maintainIfAdvised(spark: SparkSession, tableName: String,
       keyCol: String, bucketKey: String, buckets: Int,
       compact: Option[() => Long] = None): Option[Long] = {
-    // a committed-but-unapplied staging snapshot (crashed compact)
-    // outranks the threshold: appends and deletes are refusing until it
-    // rolls forward, so "maintenance" means finishing it regardless of
-    // the current tombstone count (r18)
-    val pendingRollForward = Seq("", "_docs", "_stats")
-      .exists(s => stagedProtocol(spark, tableName + "__compact" + s).isDefined)
+    val pendingRollForward =
+      IndexLog(spark, tableName).pending.exists(_.kind == "compact")
     if (!pendingRollForward &&
       !spark.catalog.tableExists(tableName + "_del")) return None
     val keys = if (!spark.catalog.tableExists(tableName + "_del")) 0L

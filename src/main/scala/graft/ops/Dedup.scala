@@ -107,14 +107,11 @@ object Dedup {
     * live view one-row-per-fingerprint. Pure file append: safe under a
     * running streaming probe. */
   def fingerprintIndexAppend(novelFps: DataFrame, tableName: String,
-      tableBuckets: Int = 32): Unit = {
-    val spark = novelFps.sparkSession
-    val delta = Bucketing.withGen(
-        novelFps.groupBy("fp").agg(min("first_id").as("first_id")),
-        Bucketing.currentGen(spark, tableName))
-      .localCheckpoint(true)
-    Bucketing.appendBucketed(delta, tableName, "fp", tableBuckets)
-  }
+      tableBuckets: Int = 32): Unit =
+    Bucketing.appendAtGen(
+      novelFps.groupBy("fp").agg(min("first_id").as("first_id"))
+        .localCheckpoint(true),
+      tableName, "fp", tableBuckets)
 
   /** Tombstone RETRACTION for a [[fingerprintIndexBuild]] table (r15 —
     * the index family was append-only; nothing could remove a retracted

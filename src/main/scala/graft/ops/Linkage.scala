@@ -201,7 +201,7 @@ object Linkage {
     * even fallback; try_element_at because ANSI element_at throws on a
     * missing map key); i == nseg is the L+1 sentinel so segment length
     * is always start(i+1) − start(i). */
-  private def segGeometry(nseg: Int, bounds: Map[Int, Seq[Int]])
+  private[graft] def segGeometry(nseg: Int, bounds: Map[Int, Seq[Int]])
       : ((Column, Int) => Column, (Column, Int) => Column) = {
     def evenStart(len: Column, i: Int): Column = {
       val rem = pmod(len, lit(nseg))
@@ -253,7 +253,7 @@ object Linkage {
     // r19: the ±τ-window key enumeration is the
     // [[graft.functions.SegKeys]] codegen kernel — one tight loop per
     // row instead of the (2τ+1)·(τ+1)-branch when/transform/sequence/
-    // substr HOF tree ([[dirtySegKeysHof]], kept as the spec-pinned
+    // substr HOF tree (KernelTwins.dirtySegKeysHof, the spec-pinned
     // twin), which measured ~0.9 ms/row at τ = 2 (~15 µs per emitted
     // key) — the single most expensive per-row expression in the
     // engine. Key multiset, order and dedup are bit-identical
@@ -262,32 +262,6 @@ object Linkage {
       explode(call_function("graft_seg_keys", col("d_s"), lit(tau),
         typedlit(bounds.map { case (l, st) => l -> st.toIndexedSeq })))
         .as("k"): _*)
-  }
-
-  /** The pre-kernel HOF formulation of [[dirtySegKeys]]' key
-    * enumeration. Kept as the independent twin the spec pins
-    * [[graft.functions.SegKeys]] bit-equal against. */
-  private[graft] def dirtySegKeysHof(d: DataFrame, tau: Int,
-      bounds: Map[Int, Seq[Int]], keep: Seq[String] = Nil): DataFrame = {
-    val nseg = tau + 1
-    val (segStart, segLen) = segGeometry(nseg, bounds)
-    val emptyKeys = array().cast("array<struct<i:int,l:int,seg:string>>")
-    val dKeyArrays = for (delta <- -tau to tau; i <- 0 until nseg) yield {
-      val lenR = length(col("d_s"))
-      val lenS = lenR + delta
-      val li = segLen(lenS, i)
-      val pi = segStart(lenS, i)
-      val jlo0 = greatest(lit(1), pi - tau)
-      val jlo = if (i == nseg - 1) greatest(jlo0, lenR - tau - li + 1) else jlo0
-      val jhi = least(lenR - li + 1, pi + tau)
-      when(lenS >= nseg && jlo <= jhi,
-        transform(sequence(jlo, jhi), j =>
-          struct(lit(i).as("i"), lenS.as("l"),
-            col("d_s").substr(j, li).as("seg"))))
-        .otherwise(emptyKeys)
-    }
-    d.select(col("d_id") +: col("d_s") +: keep.map(col) :+
-      explode(array_distinct(flatten(array(dKeyArrays: _*)))).as("k"): _*)
   }
 
   /** The blocked candidate generator of [[editJoin]] —
@@ -395,7 +369,7 @@ object Linkage {
     // catalog joins the persisted family's retraction lifecycle — the
     // tombstone key is the CATALOG RECORD id, so one delete suppresses
     // every segment row AND the short-leg row of that record
-    Bucketing.initTombstones(segRows, "c_id", tableName)
+    Bucketing.initTombstones(segRows, "c_id", tableName, "_meta")
     Bucketing.writeBucketed(
       Bucketing.withGen(segRows.unionByName(shortRows), 0L),
       tableName, "kh", tableBuckets)
@@ -471,32 +445,7 @@ object Linkage {
     * boundaries stop pruning (the probe stays exact either way). */
   def editIndexAppend(newClean: DataFrame, cId: String, cStr: String,
       tableName: String, tableBuckets: Int = 32): Unit = {
-    val spark = newClean.sparkSession
-    // meta rows + the `_del` max sequence (current generation) in ONE
-    // collect job (r19, verdict item 5 — was one tiny job each; both
-    // are read-only, so lifecycle crash semantics are unchanged)
-    val rows = spark.table(tableName + "_meta")
-      .select(lit(1).as("_src"), col("len"), col("starts"), col("tau"),
-        lit(0L).as("_g"))
-      .unionByName(
-        (if (spark.catalog.tableExists(tableName + "_del"))
-          spark.table(tableName + "_del")
-            .agg(coalesce(max("seq"), lit(0L)).as("_g"))
-        else spark.range(1).select(lit(0L).as("_g")))
-          .select(lit(0).as("_src"), lit(-1).as("len"),
-            lit(null).cast("array<int>").as("starts"), lit(0).as("tau"),
-            col("_g")))
-      .collect()
-    val metaRows = rows.filter(_.getInt(0) == 1)
-    require(metaRows.nonEmpty,
-      s"$tableName${"_meta"} is empty — not an editIndexBuild table")
-    val tau = metaRows.head.getAs[Int]("tau")
-    val bounds: Map[Int, Seq[Int]] = metaRows.iterator
-      .filter(_.getAs[Int]("len") >= 0)
-      .map(r => r.getAs[Int]("len") ->
-        r.getSeq[Int](r.fieldIndex("starts")).toIndexedSeq.asInstanceOf[Seq[Int]])
-      .toMap
-    val gen = rows.find(_.getInt(0) == 0).map(_.getAs[Long]("_g")).getOrElse(0L)
+    val (tau, bounds) = readEditIndexMeta(newClean.sparkSession, tableName)
     val nseg = tau + 1
     val c = newClean.select(col(cId).as("c_id"), col(cStr).as("c_s"))
     val segRows = cleanSegKeys(c, tau, bounds)
@@ -507,8 +456,7 @@ object Linkage {
         col("c_id"), col("c_s"), lit(true).as("short"))
     // stamped with the index's current generation (a re-appended
     // deleted record revives; pure file append, stream-safe)
-    Bucketing.appendBucketed(
-      Bucketing.withGen(segRows.unionByName(shortRows), gen),
+    Bucketing.appendAtGen(segRows.unionByName(shortRows),
       tableName, "kh", tableBuckets)
   }
 

@@ -1,10 +1,8 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 
 /** Runtime enforcement of the STATIC-SIDE REFRESH ENVELOPE (r17 —
@@ -20,15 +18,12 @@ import java.util.concurrent.ConcurrentHashMap
   * stats forever with no signal anywhere. This object closes the gap
   * between documented and enforced:
   *
-  *   - every lifecycle write path in [[Bucketing]] (and through it
-  *     every index build/append/delete/compact in the library) bumps a
-  *     PERSISTED per-table write counter — a tiny `<table>.__writes`
-  *     file next to the table's warehouse directory, NOT a Spark
-  *     table: one filesystem metadata op per maintenance write, no
-  *     job, readable by ANY process sharing the warehouse (at cluster
-  *     scale the maintainer and the stream driver share the DFS, not
-  *     a JVM);
-  *   - [[capture]] snapshots the counters for a stream's static tables
+  *   - every lifecycle step commits its family-table writes to the
+  *     index's [[IndexLog]] (a write count per table in each entry) —
+  *     no job, readable by ANY process sharing the log root (at
+  *     cluster scale the maintainer and the streaming application
+  *     share the DFS, not a JVM);
+  *   - [[captureIndex]] snapshots the counts of a stream's index family
   *     at start time and returns a [[Guard]];
   *   - the guard answers [[Guard.staleTables]] (tables written MORE
   *     THAN ONCE since capture — the first write is inside the
@@ -38,13 +33,9 @@ import java.util.concurrent.ConcurrentHashMap
   *     operator gets "restart me" at breach time instead of mixed-era
   *     scores at debug time.
   *
-  * Counter writes are single-maintainer like every other lifecycle op
-  * (the [[Bucketing]] concurrency contract): the read-increment-rename
-  * is not a CAS, two concurrent maintainers could lose an increment —
-  * exactly as they could interleave `currentGen` stamps. Guards only
-  * READ the counter, from any number of processes. The counter file
-  * is written via temp + atomic rename, so a reader never sees a torn
-  * value (on a rename-atomic filesystem — see [[recordWrite]] and
+  * Guards only READ the log, from any number of processes; a log
+  * version is written once by an atomic no-overwrite rename, so a
+  * reader never sees a torn entry (on a rename-atomic filesystem — see
   * [[CounterDirConf]] for the object-store caveat).
   *
   * r18: enforcement is DEFAULT-ON — every streaming probe constructor
@@ -52,93 +43,20 @@ import java.util.concurrent.ConcurrentHashMap
   * guard via [[autoGuard]] at stream definition time ([[guardOf]]
   * retrieves it), and a breach additionally posts an
   * [[EnvelopeBreachEvent]] to the Spark listener bus so cluster
-  * monitoring sees it. The manual [[capture]]/[[captureIndex]] API is
-  * unchanged for composite pipelines.
+  * monitoring sees it. The manual [[captureIndex]] API stays for
+  * composite pipelines.
   */
 object RefreshEnvelope {
 
-  /** Serializes in-process counter bumps (cross-process increments are
-    * single-maintainer by the lifecycle contract; guards only read). */
-  private val fsLock = new Object
-
-  /** Session conf key overriding where the `.__writes` counter files
-    * live (default: the warehouse dir, next to the tables they count).
-    * The counter scheme REQUIRES an atomic-rename filesystem (r18 —
-    * see [[recordWrite]]): on an object-store warehouse (s3a/gcs,
-    * where rename is an emulated copy+delete and the FileContext
-    * binding may be absent entirely), point this at an HDFS or local
-    * path so guards keep their never-torn / never-falsely-fresh read
-    * guarantee while the data stays on the object store. */
+  /** Session conf key overriding the root of the per-index
+    * [[IndexLog]]s (default: `<warehouse>.__logs`, beside the tables'
+    * warehouse). The log REQUIRES an atomic no-overwrite rename: on an
+    * object-store warehouse (s3a/gcs, where rename is an emulated
+    * copy+delete and the FileContext binding may be absent entirely),
+    * point this at an HDFS or local path so guards keep their
+    * never-torn read and maintainers their conflict detection while the
+    * data stays on the object store. */
   val CounterDirConf = "spark.graft.refreshEnvelope.dir"
-
-  private def counterPath(spark: SparkSession, table: String): Path =
-    new Path(
-      spark.conf.getOption(CounterDirConf)
-        .getOrElse(spark.conf.get("spark.sql.warehouse.dir")),
-      table.toLowerCase + ".__writes")
-
-  /** Maintenance writes recorded for `table` (0 if never written
-    * through a [[Bucketing]] lifecycle op). Safe against a concurrent
-    * [[recordWrite]]: the counter is replaced by ATOMIC rename-with-
-    * overwrite, so the file never disappears once created — a
-    * FileNotFoundException can only mean "never written" and reads as
-    * 0 (it is still caught, for filesystems whose exists/open pair
-    * races object listing). */
-  def writeCount(spark: SparkSession, table: String): Long = {
-    val p = counterPath(spark, table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(buf) finally in.close()
-      new String(buf, StandardCharsets.UTF_8).trim.toLong
-    } catch { case _: java.io.FileNotFoundException => 0L }
-  }
-
-  /** Bump `table`'s persisted write counter — called by every
-    * [[Bucketing]] lifecycle write. Written to a temp file and moved
-    * into place with FileContext's ATOMIC rename-overwrite (a plain
-    * FileSystem.rename cannot replace an existing file without a
-    * delete-first gap in which a concurrent guard would read 0 —
-    * i.e. falsely FRESH at the exact moment of a breaching write);
-    * rename failures propagate rather than silently losing the
-    * increment. The increment itself is single-maintainer by the
-    * lifecycle contract.
-    *
-    * FILESYSTEM CONTRACT (r18, the r17 verdict's doc item): the
-    * never-torn / never-falsely-fresh guarantee holds exactly where
-    * FileContext rename-with-overwrite is ATOMIC — HDFS and local
-    * filesystems, i.e. the documented 1000-executor topology (the
-    * maintainer and every guard share a DFS). Object stores (s3a,
-    * gcs) emulate rename as copy+delete and may lack the
-    * AbstractFileSystem binding FileContext needs, so a guard there
-    * could read a mid-rename gap as "never written" — falsely fresh
-    * during a breaching write. On an object-store warehouse, route
-    * the counters to a rename-atomic store via [[CounterDirConf]]
-    * (data stays put; only the tiny counter files move). */
-  def recordWrite(spark: SparkSession, table: String): Unit = fsLock.synchronized {
-    val p = counterPath(spark, table)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val next = writeCount(spark, table) + 1L
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val fs = p.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Remove `table`'s counter file (r18 — compact-staging cleanup:
-    * staging tables pass through the lifecycle write helpers and so
-    * accumulate counters, which must not outlive the staging itself).
-    * Never called for live index-family tables — deleting a live
-    * counter would rewind guards' envelopes. */
-  private[ops] def clearCounter(spark: SparkSession, table: String): Unit = {
-    val p = counterPath(spark, table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, false)
-  }
 
   /** The static-table FAMILY of a persisted index — the base table
     * plus every side table the library's probes plan in statically
@@ -152,26 +70,21 @@ object RefreshEnvelope {
   private def family(indexName: String): Seq[String] =
     indexName +: Seq("_del", "_docs", "_stats", "_meta").map(indexName + _)
 
-  /** Snapshot the write counters of a streaming plan's static tables —
-    * call where the stream is DEFINED (the plan pins its static
-    * relations there). The returned guard is the runtime surface of
-    * the refresh envelope. */
-  def capture(spark: SparkSession, tables: Seq[String]): Guard =
-    new Guard(spark, tables.distinct.map(t =>
-      t -> ((writeCount(spark, t), spark.catalog.tableExists(t)))).toMap,
-      tables.headOption.getOrElse(""))
-
-  /** [[capture]] over a whole index family — INCLUDING side tables
-    * that do not exist yet: a table created after stream start is
-    * never resolved by the running stream at all (the
-    * [[Bucketing.initTombstones]] note), so for born-after-capture
+  /** Snapshot the write counts of an index family — call where the
+    * stream is DEFINED (the plan pins its static relations there). The
+    * returned guard is the runtime surface of the refresh envelope. The
+    * family INCLUDES side tables that do not exist yet: a table created
+    * after stream start is never resolved by the running stream at all
+    * (the [[Bucketing.initTombstones]] note), so for born-after-capture
     * tables even the FIRST write is invisible and trips the guard
     * (legacy indexes predating eager `_del` creation are the case in
     * point). */
-  def captureIndex(spark: SparkSession, indexName: String): Guard =
-    new Guard(spark, family(indexName).distinct.map(t =>
-      t -> ((writeCount(spark, t), spark.catalog.tableExists(t)))).toMap,
+  def captureIndex(spark: SparkSession, indexName: String): Guard = {
+    val log = IndexLog(spark, indexName)
+    new Guard(spark, family(indexName).map(t =>
+      t -> ((log.writeCount(t), spark.catalog.tableExists(t)))).toMap,
       indexName)
+  }
 
   /** DEFAULT-ON guards (r18 — the r17 verdict's top item): every
     * streaming probe constructor that statically joins a persisted
@@ -240,15 +153,15 @@ object RefreshEnvelope {
   final case class EnvelopeBreachEvent(index: String, staleTable: String)
     extends org.apache.spark.scheduler.SparkListenerEvent
 
-  /** A captured envelope: compares live counters against the
-    * stream-start snapshot. One write per table since capture is fine
-    * (visible to the running stream); a second means the stream is
-    * serving a stale static side and must restart. A table that did
+  /** A captured envelope: compares the index log's write counts
+    * against the stream-start snapshot. One write per table since
+    * capture is fine (visible to the running stream); a second means
+    * the stream is serving a stale static side and must restart. A table that did
     * not EXIST at capture trips on its first write — the stream never
     * resolves it at all. */
   final class Guard private[RefreshEnvelope] (spark: SparkSession,
       captured: Map[String, (Long, Boolean)],
-      label: String) extends StreamingQueryListener {
+      index: String) extends StreamingQueryListener {
 
     private val warned = ConcurrentHashMap.newKeySet[String]()
     private val attached = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -256,9 +169,12 @@ object RefreshEnvelope {
     /** Tables whose content the running stream no longer (or never)
       * sees: written more than once since capture, or written at all
       * if they did not exist at capture. Empty = within envelope. */
-    def staleTables: Seq[String] = captured.toSeq.sortBy(_._1).collect {
-      case (t, (at, existed)) if
-          writeCount(spark, t) - at >= (if (existed) 2L else 1L) => t
+    def staleTables: Seq[String] = {
+      val log = IndexLog(spark, index)
+      captured.toSeq.sortBy(_._1).collect {
+        case (t, (at, existed)) if
+            log.writeCount(t) - at >= (if (existed) 2L else 1L) => t
+      }
     }
 
     /** True once any table breached the envelope (set by [[check]] /
@@ -296,7 +212,7 @@ object RefreshEnvelope {
                 "written more than once since stream start — streaming " +
                 "probes over it are serving stale state; restart the stream.")
             try org.apache.spark.graftbus.ListenerDrain.post(
-              spark.sparkContext, EnvelopeBreachEvent(label, t))
+              spark.sparkContext, EnvelopeBreachEvent(index, t))
             catch { case scala.util.control.NonFatal(_) => () } // bus stopped mid-shutdown: the warning above already landed
           }
         }

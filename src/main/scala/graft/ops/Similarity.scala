@@ -142,10 +142,7 @@ object Similarity {
     // re-appended vector id is live again from this append on (its
     // stale pre-delete signatures stay suppressed), and the append is a
     // pure file write — safe under a running streaming probe
-    Bucketing.appendBucketed(
-      Bucketing.withGen(sig,
-        Bucketing.currentGen(newCorpus.sparkSession, tableName)),
-      tableName, "bucket", tableBuckets)
+    Bucketing.appendAtGen(sig, tableName, "bucket", tableBuckets)
   }
 
   /** Tombstone RETRACTION for a [[lshIndexBuild]] table (r15): vector
@@ -321,8 +318,8 @@ object Similarity {
     * (r19, verdict item 2): the codebooks ride as a flat double[]
     * codegen reference object instead of m O(k·sub) array literals with
     * a zip_with/aggregate tree each — constant-size plan, one loop nest
-    * per row. Bit-equal to the HOF formulation ([[adcTablesHof]], the
-    * spec-pinned twin). */
+    * per row. Bit-equal to the HOF formulation (the spec-pinned twin
+    * `graft.KernelTwins.adcTablesHof`). */
   private[graft] def adcTablesCol(v: Column,
       codebooks: Array[Array[Seq[Double]]], squared: Boolean): Column = {
     val m = codebooks.length
@@ -332,24 +329,6 @@ object Similarity {
       typedLit(codebooks.flatten.flatten.toIndexedSeq),
       typedLit(codebooks.map(_.length).toIndexedSeq),
       lit(sub), lit(squared))
-  }
-
-  /** The pre-kernel HOF formulation of the ADC tables. Kept as the
-    * independent twin the spec pins [[graft.functions.AdcTables]]
-    * bit-equal against. */
-  private[graft] def adcTablesHof(v: Column,
-      codebooks: Array[Array[Seq[Double]]], squared: Boolean): Column = {
-    val m = codebooks.length
-    val dim = codebooks.map(_.head.length).sum
-    val sub = dim / m
-    array((0 until m).map { j =>
-      val cbLit = typedLit(codebooks(j).map(_.toIndexedSeq).toIndexedSeq)
-      val subV = transform(slice(v, j * sub + 1, sub), _.cast("double"))
-      transform(cbLit, c => aggregate(
-        zip_with(subV, c,
-          (x, y) => if (squared) (x - y) * (x - y) else x * y),
-        lit(0.0), (a, x) => a + x))
-    }: _*)
   }
 
   /** Σ over subspaces of the candidate's code lookups in `_tab` — the
@@ -389,31 +368,12 @@ object Similarity {
       nprobe: Int): Column =
     // the [[graft.functions.CentroidTopK]] codegen kernel (r19 — the
     // last zip_with-over-centroid-literal tree in the IVFADC probes);
-    // bit-equal to [[coarseProbeCellsHof]], the spec-pinned twin
+    // bit-equal to the spec-pinned twin KernelTwins.coarseProbeCellsHof
     call_function("graft_centroid_topk",
       transform(v, _.cast("double")),
       typedLit(cents.flatten.toIndexedSeq),
       typedLit(centroidBias(cents, cosine = false).toIndexedSeq),
       lit(nprobe))
-
-  /** The pre-kernel HOF formulation of the coarse-cell ranking. Kept as
-    * the independent twin the spec pins [[graft.functions.CentroidTopK]]
-    * bit-equal against. */
-  private[graft] def coarseProbeCellsHof(v: Column, cents: Array[Seq[Double]],
-      nprobe: Int): Column = {
-    val centsLit = typedLit(cents.map(_.toIndexedSeq).toIndexedSeq)
-    val bias = typedLit(centroidBias(cents, cosine = false).toIndexedSeq)
-    val vd = transform(v, _.cast("double"))
-    val scored = zip_with(centsLit, sequence(lit(0), lit(cents.length - 1)),
-      (c, j) => struct(
-        (aggregate(zip_with(vd, c, (x, y) => x * y),
-          lit(0.0), (a, x) => a + x) - element_at(bias, j + 1)).as("s"),
-        j.as("j")))
-    val sorted = array_sort(scored, (a, b) =>
-      when(a("s") > b("s"), -1).when(a("s") < b("s"), 1)
-        .otherwise(when(a("j") < b("j"), -1).otherwise(1)))
-    transform(slice(sorted, 1, nprobe), s => s("j"))
-  }
 
   /** `v − c[cell]`: the residual of a vector against its coarse
     * centroid, with the centroid matrix riding as a 2-D literal indexed
@@ -422,20 +382,10 @@ object Similarity {
       cents: Array[Seq[Double]]): Column =
     // the [[graft.functions.CoarseResidual]] codegen kernel (r19 — the
     // last zip_with-over-centroid-literal node in the IVFADC plans);
-    // bit-equal to [[residualColHof]], the spec-pinned twin
+    // bit-equal to the spec-pinned twin KernelTwins.residualColHof
     call_function("graft_residual", transform(vec, _.cast("double")),
       cellCol.cast("int"), typedLit(cents.flatten.toIndexedSeq),
       lit(cents.length))
-
-  /** The pre-kernel HOF formulation of the coarse residual. Kept as the
-    * independent twin the spec pins [[graft.functions.CoarseResidual]]
-    * bit-equal against. */
-  private[graft] def residualColHof(vec: Column, cellCol: Column,
-      cents: Array[Seq[Double]]): Column = {
-    val centsLit = typedLit(cents.map(_.toIndexedSeq).toIndexedSeq)
-    zip_with(transform(vec, _.cast("double")),
-      element_at(centsLit, cellCol + 1), (x, c) => x - c)
-  }
 
   /** Cell assignment under the raw-L2 coarse quantizer — the
     * [[graft.functions.CentroidArgmax]] codegen kernel. */
@@ -637,10 +587,8 @@ object Similarity {
   def ivfPqIndexAppend(newCorpus: DataFrame, idCol: String, vecCol: String,
       codebooks: Array[Array[Seq[Double]]], coarseCents: Array[Seq[Double]],
       tableName: String, tableBuckets: Int = 32): Unit =
-    Bucketing.appendBucketed(
-      Bucketing.withGen(
-        ivfPqCoded(newCorpus, idCol, vecCol, codebooks, coarseCents),
-        Bucketing.currentGen(newCorpus.sparkSession, tableName)),
+    Bucketing.appendAtGen(
+      ivfPqCoded(newCorpus, idCol, vecCol, codebooks, coarseCents),
       tableName, "cell", tableBuckets)
 
   /** Exact re-rank of ANN candidates — the FAISS "refine" stage, and the
@@ -746,23 +694,6 @@ object Similarity {
     if (cosine) Array.fill(cents.length)(0.0)
     else cents.map(c => c.map(x => x * x).sum / 2)
 
-  /** The pre-kernel HOF formulation of the k-means assignment (argmax
-    * over an array_max of (score, −j) structs against a 2-D centroid
-    * literal). Kept as the independent twin the spec pins
-    * [[graft.functions.CentroidArgmax]] bit-equal against. */
-  private[graft] def centroidArgmaxHof(v: Column,
-      cents: Array[Seq[Double]], cosine: Boolean): Column = {
-    val centsLit = typedLit(cents.map(_.toIndexedSeq).toIndexedSeq)
-    val halfSq = typedLit(centroidBias(cents, cosine).toIndexedSeq)
-    val scored = zip_with(centsLit, sequence(lit(0), lit(cents.length - 1)),
-      (c, j) => struct(
-        (aggregate(zip_with(v, c, (x, y) => x * y),
-          lit(0.0), (a, x) => a + x) -
-          (if (cosine) lit(0.0) else element_at(halfSq, j + 1))).as("s"),
-        (lit(0) - j).as("nj")))
-    -array_max(scored).getField("nj")
-  }
-
   def kmeans(df: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int = 5, cosine: Boolean = true): DataFrame =
     kmeansImpl(df, idCol, vecCol, k, iters, cosine)._1
@@ -796,7 +727,7 @@ object Similarity {
       // unpacks into codegen reference objects, so the per-row cost is
       // one tight multiply-add loop nest and the plan is constant-size
       // in k (no O(k·dim) expression fan-out). Bit-equal to the HOF
-      // array_max formulation ([[centroidArgmaxHof]], pinned in
+      // array_max formulation (KernelTwins.centroidArgmaxHof, pinned in
       // DedupSimilaritySpec) — the unrolled-SQL oracles are unchanged.
       def assigned: DataFrame =
         normed.withColumn("cluster", call_function("graft_centroid_argmax",

@@ -132,10 +132,7 @@ object TfIdf {
       // doc, filtered through the SAME tombstones) exists so a delete can
       // retract the doc's additive-stats contribution without scanning
       // the posting table (doc_id is not the bucket key there).
-      Bucketing.initTombstones(tf, "doc_id", tableName)
-      // a rebuild supersedes a pending (crashed) append, exactly as it
-      // supersedes a pending compact (r18)
-      clearAppendMarker(docs.sparkSession, tableName)
+      Bucketing.initTombstones(tf, "doc_id", tableName, "_docs", "_stats")
       Bucketing.writeBucketed(Bucketing.withGen(tf, 0L),
         tableName, "term", tableBuckets)
       Bucketing.writeTable(
@@ -144,12 +141,10 @@ object TfIdf {
       // stats rows carry (seq, del_sig) bookkeeping: seq is 0 for additive
       // contributions (build/append/compact) and the DELETE SEQUENCE for
       // retraction rows; del_sig is the deleted id-set's order-free digest
-      // (XOR of per-id xxhash64, 0 for additive rows). Together they are
-      // the retry-detection stamp [[searchIndexDelete]] checks: seq says
-      // "a retraction at this sequence exists", del_sig says it was THIS
-      // delete's (a different id set at the same sequence — an abandoned
-      // partial delete followed by a new one — fails loudly instead of
-      // silently skipping the new retraction). Delete seqs are ≥ 1, so
+      // (XOR of per-id xxhash64) on retraction rows, the batch digest on
+      // append rows, 0 on build/compact rows. They tell the retry of an
+      // in-flight delete or append which of its writes already landed —
+      // the one thing the index log cannot see. Delete seqs are ≥ 1, so
       // additive rows can never shadow a retraction.
       Bucketing.writeTable(
         perDoc.agg(count(lit(1)).as("n_docs"),
@@ -168,33 +163,25 @@ object TfIdf {
     * from-scratch build over the union would (TfIdfSpec pins it).
     *
     * The three appends are not atomic, so the append is RETRYABLE the
-    * same way [[searchIndexDelete]] is (r18 — single MAINTAINER, not
-    * single ATTEMPT): before anything lands, the batch's digest is
-    * written to a tiny `<table>.__append` MARKER FILE next to the
-    * warehouse tables (temp + atomic rename, the [[RefreshEnvelope]]
-    * counter pattern — a FILE, not a table row, so the append still
-    * makes exactly one write per family table and a running stream's
-    * refresh envelope is untouched), and the additive stats row —
-    * stamped with the same digest in its `del_sig` column — lands
-    * LAST, so its presence means the whole append completed and the
-    * marker clears. The digest is the order-free XOR of
-    * xxhash64(doc_id, generation) over the batch's distinct ids,
-    * GENERATION-SALTED so re-appending the same ids after a delete (the
-    * revival path) reads as a new append, never as a retry of the
-    * original (an id-only digest would silently no-op the revival). A
-    * retry — same batch, marker present, no completed row — probes one
-    * bucket-pruned posting row and one `_docs` row of the batch
-    * (gen-matched, so a revived doc's pre-existing rows cannot
+    * same way [[searchIndexDelete]] is: before anything lands, the
+    * index's [[IndexLog]] commits the append as in flight under its
+    * batch digest, and the additive stats row — stamped with the same
+    * digest in its `del_sig` column — lands LAST, so its presence means
+    * the whole append completed; the log then commits it done. The
+    * digest is the order-free XOR of xxhash64(doc_id, generation) over
+    * the batch's distinct ids, GENERATION-SALTED so re-appending the
+    * same ids after a delete (the revival path) reads as a new append,
+    * never as a retry of the original (an id-only digest would silently
+    * no-op the revival). A retry — same batch in flight, no completed
+    * row — probes one bucket-pruned posting row and one `_docs` row of
+    * the batch (gen-matched, so a revived doc's pre-existing rows cannot
     * masquerade as this append's; each append is all-or-nothing at job
     * commit) and performs only the missing appends, converging exactly:
-    * no doubled postings, no double-counted stats. A DIFFERENT append
-    * issued while one is pending, an append under a pending partial
-    * delete (its rows would be stamped with the stale generation and
-    * suppressed when the delete's tombstones land), and a delete or
-    * compact under a pending append all fail loudly instead of
-    * interleaving with the partial state — the loud-fail contract of
-    * the delete's digest-mismatch path. A REBUILD supersedes a pending
-    * append ([[searchIndexBuild]] clears the marker). */
+    * no doubled postings, no double-counted stats. Re-running a
+    * completed append is a no-op. Any other lifecycle op while an
+    * append, delete or compact is in flight fails loudly instead of
+    * interleaving with the partial state ([[Bucketing.pendingError]]);
+    * a REBUILD supersedes it. */
   def searchIndexAppend(newDocs: DataFrame, idCol: String, textCol: String,
       tableName: String, tableBuckets: Int = 32): Unit =
     appendImpl(newDocs, idCol, textCol, tableName, tableBuckets,
@@ -203,31 +190,7 @@ object TfIdf {
   /** [[searchIndexAppend]] with a crash-injection point — package-
     * visible so LifecycleRecoverySpec can replay every partial-append
     * state. `failAfter` = persisted steps allowed before the injected
-    * crash: 1 = pending marker only, 2 = + postings, 3 = + `_docs`. */
-  /** The lifecycle bookkeeping reads in ONE job (r19, verdict item 5 —
-    * was one tiny job each): `_del`'s max sequence (the current
-    * generation) and the `_stats` (seq, del_sig) log arrive in a single
-    * union'd collect. Values are identical to
-    * [[Bucketing.currentGen]] + a `_stats` collect run back to back —
-    * both are read-only and no write can land between them in the
-    * single-maintainer contract, so every crash-replay path the
-    * LifecycleRecoverySpec matrix pins is unchanged. */
-  private def genAndStatsLog(spark: SparkSession,
-      tableName: String): (Long, Array[(Long, Long)]) = {
-    val stats = spark.table(tableName + "_stats")
-      .select(lit(1).as("_src"), col("seq").as("a"), col("del_sig").as("b"))
-    val rows = (if (spark.catalog.tableExists(tableName + "_del"))
-        spark.table(tableName + "_del")
-          .agg(coalesce(max("seq"), lit(0L)).as("a"))
-          .select(lit(0).as("_src"), col("a"), lit(0L).as("b"))
-          .unionByName(stats)
-      else stats).collect()
-    val gen = rows.find(_.getInt(0) == 0).map(_.getLong(1)).getOrElse(0L)
-    val book = rows.filter(_.getInt(0) == 1)
-      .map(r => (r.getLong(1), r.getLong(2)))
-    (gen, book)
-  }
-
+    * crash: 1 = in-flight commit only, 2 = + postings, 3 = + `_docs`. */
   private[graft] def appendImpl(newDocs: DataFrame, idCol: String,
       textCol: String, tableName: String, tableBuckets: Int,
       failAfter: Int): Unit = {
@@ -235,10 +198,9 @@ object TfIdf {
     def hook(step: Int): Unit = if (step >= failAfter)
       throw new IllegalStateException(
         s"[graft-test] injected crash after append step $step")
+    val log = IndexLog(spark, tableName)
     ensureStatsSchema(spark, tableName)
-    assertNoPendingFamilyCompact(spark, tableName, "searchIndexAppend")
-    // generation + bookkeeping log in one job (see [[genAndStatsLog]])
-    val (gen, book) = genAndStatsLog(spark, tableName)
+    val gen = log.gen
     // ONE termCounts pass over the batch (r18 optimization — the batch
     // digest, postings, `_docs`, and `_stats` appends each re-scanned
     // and re-tokenized it before): the per-doc (doc_id, dl, _tc)
@@ -263,31 +225,18 @@ object TfIdf {
       .first()
     if (idAgg.getLong(0) == 0L) return // empty batch: nothing to append
     val digest = { val d = idAgg.getLong(1); if (d == 0L) 1L else d }
-    def completedRow(d: Long) = book.exists(p => p._1 == 0L && p._2 == d)
-    if (completedRow(digest)) {
-      // a finished append's retry: idempotent no-op (clear a marker a
-      // crash between the stats append and the cleanup left behind)
-      clearAppendMarker(spark, tableName)
+    val begun = log.pending match {
+      case None => false
+      case Some(IndexLog.Op("append", d, _)) if d == digest => true
+      case Some(op) => throw Bucketing.pendingError(log, op, "searchIndexAppend")
+    }
+    // a completed append of this batch (its stats row landed): re-running
+    // it is a no-op — after committing it done, if a crash hit first
+    if (!spark.table(tableName + "_stats")
+        .filter(col("seq") === 0L && col("del_sig") === digest).isEmpty) {
+      if (begun) log.commit()
       return
     }
-    if (book.nonEmpty && book.map(_._1).max > gen)
-      throw new IllegalStateException(
-        s"$tableName: a PRIOR delete at sequence ${book.map(_._1).max} " +
-          "left a partial retraction (stats row present, tombstones " +
-          "absent) — retry that delete to completion before appending; " +
-          "rows appended now would carry the stale generation and be " +
-          "suppressed when the delete's tombstones land " +
-          "(single-maintainer contract, see graft.ops.Bucketing)")
-    val marker = pendingAppendDigest(spark, tableName)
-    marker.filter(d => d != digest && !completedRow(d)).foreach { d =>
-      throw new IllegalStateException(
-        s"$tableName: a prior append left a partial state (pending " +
-          s"marker $d without a completed stats row) — retry that " +
-          "append to completion before issuing new ones; interleaving " +
-          "would make both unrecoverable (single-maintainer contract, " +
-          "see graft.ops.Bucketing)")
-    }
-    val begun = marker.contains(digest)
     val tf = perDoc
       .select(col("doc_id"), col("dl"), explode(col("_tc")).as("_p"))
       .select(col("_p.term").as("term"), col("doc_id"),
@@ -295,7 +244,8 @@ object TfIdf {
     var landedPostings = false
     var landedDocs = false
     if (!begun) {
-      writeAppendMarker(spark, tableName, digest)
+      log.commit(wrote = Seq("", "_docs", "_stats"),
+        op = Some(IndexLog.Op("append", digest)))
     } else {
       // RETRY: learn which appends landed — each is all-or-nothing at
       // job commit, so one gen-matched existence probe per table
@@ -320,8 +270,8 @@ object TfIdf {
     }
     hook(1)
     if (!landedPostings)
-      Bucketing.appendBucketed(Bucketing.withGen(tf, gen),
-        tableName, "term", tableBuckets)
+      Bucketing.appendTable(Bucketing.withGen(tf, gen), tableName,
+        Some(("term", tableBuckets)))
     hook(2)
     if (!landedDocs)
       Bucketing.appendTable(Bucketing.withGen(
@@ -334,85 +284,8 @@ object TfIdf {
         .select(col("n_docs"), col("total_dl"),
           lit(0L).as("seq"), lit(digest).as("del_sig")),
       tableName + "_stats")
-    clearAppendMarker(spark, tableName)
+    log.commit()
     } finally perDoc.unpersist()
-  }
-
-  /** Warehouse path of the pending-append marker file — a FILE, not a
-    * table row, so the marker adds no family-table write (the refresh
-    * envelope of a running stream sees exactly one `_stats` write per
-    * append, as before r18). */
-  private def appendMarkerPath(spark: SparkSession,
-      tableName: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      tableName.toLowerCase + ".__append")
-
-  /** The digest of a pending (begun, not completed) append, if any. */
-  private def pendingAppendDigest(spark: SparkSession,
-      tableName: String): Option[Long] = {
-    val p = appendMarkerPath(spark, tableName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(buf) finally in.close()
-      Some(new String(buf,
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-    } catch { case _: java.io.FileNotFoundException => None }
-  }
-
-  /** Write the pending-append marker via temp + atomic rename (the
-    * [[RefreshEnvelope.recordWrite]] pattern — never torn). */
-  private def writeAppendMarker(spark: SparkSession, tableName: String,
-      digest: Long): Unit = {
-    val p = appendMarkerPath(spark, tableName)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tmp")
-    val fs = p.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(digest.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Remove the pending-append marker (append completed, or a rebuild
-    * superseded it). */
-  private[graft] def clearAppendMarker(spark: SparkSession,
-      tableName: String): Unit = {
-    val p = appendMarkerPath(spark, tableName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, false)
-  }
-
-  /** The pending partial append of `tableName`, if one exists: marker
-    * file present AND no completed stats row carries its digest. */
-  private def pendingAppend(spark: SparkSession, tableName: String,
-      book: Array[(Long, Long)]): Option[Long] =
-    pendingAppendDigest(spark, tableName)
-      .filterNot(d => book.exists(p => p._1 == 0L && p._2 == d))
-
-  /** Loud guard shared by the BM25 lifecycle writes: refuse while a
-    * crashed [[searchIndexCompact]] has committed staging snapshots
-    * pending roll-forward (writing now would be silently erased when
-    * the staged side tables replace the live ones). */
-  private def assertNoPendingFamilyCompact(spark: SparkSession,
-      tableName: String, op: String): Unit = {
-    Bucketing.assertNoPendingCompact(spark, tableName, op)
-    Seq("_docs", "_stats").foreach { s =>
-      if (Bucketing.stagedProtocol(spark,
-          tableName + "__compact" + s).isDefined)
-        throw new IllegalStateException(
-          s"$op($tableName): a crashed searchIndexCompact left a " +
-            s"committed staging snapshot (${tableName}__compact$s) — " +
-            "roll it forward to completion first by re-running " +
-            "searchIndexCompact, or rebuild the index (which discards " +
-            "the pending compact); writing now would be silently " +
-            "erased when the staged side tables replace the live ones " +
-            "(single-maintainer contract, see graft.ops.Bucketing)")
-    }
   }
 
   /** One-time in-place migration for `_stats` tables persisted before
@@ -420,9 +293,9 @@ object TfIdf {
     * with both stamped 0 (all legacy rows are additive — the columns
     * only ever distinguish retraction rows, which legacy tables cannot
     * contain mid-delete because the delete that writes them also reads
-    * the columns). Idempotent, tiny table, counts as one maintenance
-    * write. Without it a legacy index's first post-upgrade delete or
-    * append fails on schema mismatch with no hint at the cause. */
+    * the columns). Idempotent, tiny table. Without it a legacy index's
+    * first post-upgrade delete or append fails on schema mismatch with
+    * no hint at the cause. */
   private def ensureStatsSchema(spark: SparkSession,
       tableName: String): Unit = {
     val stats = tableName + "_stats"
@@ -457,81 +330,63 @@ object TfIdf {
     * probe(rebuilt over the survivors) — spec-pinned in TfIdfSpec,
     * oracled by q_bm25_tombstone.
     *
-    * The two appends are not atomic, so the delete is made RETRYABLE
-    * instead (single MAINTAINER, not single ATTEMPT — the
-    * [[Bucketing]] lifecycle's concurrency contract): the retraction
-    * row is stamped with this delete's sequence AND an order-free
-    * digest of its id set, and stats land BEFORE tombstones. A failure
-    * between the two leaves a transient state (stats retracted, docs
-    * still ranking) that re-running the same delete converges EXACTLY:
-    * the retry sees its (seq, digest) already in `_stats` (the
-    * tombstones never landed, so [[Bucketing.currentGen]] still yields
-    * the same sequence), skips the retraction, and completes the
-    * tombstone append. A DIFFERENT delete issued while a partial one is
-    * pending would claim the same sequence — the digest mismatch fails
-    * it LOUDLY instead of silently skipping its retraction (the stats
-    * would otherwise skew for every score, permanently after compact).
-    * The opposite append order would be worse than non-atomic — once
-    * tombstones land, the docs read as dead, a retry measures a ZERO
-    * retraction, and the stats stay skewed by the deleted docs'
-    * (n_docs, total_dl) forever. */
+    * The two appends are not atomic, so the delete is made RETRYABLE:
+    * the index's [[IndexLog]] first commits the delete as in flight —
+    * claiming the next sequence under an order-free digest of the id
+    * set — then the retraction row (stamped with that sequence and
+    * digest) lands BEFORE the tombstones, and the log commits the
+    * delete done. Re-running the same delete after a failure anywhere
+    * in between converges EXACTLY: the retry finds its own delete in
+    * flight, skips the retraction if its (seq, digest) row is already in
+    * `_stats`, and completes the tombstone append. A DIFFERENT delete
+    * (or an append, or a compact) issued while one is in flight fails
+    * LOUDLY instead of silently skewing the stats. The opposite append
+    * order would be worse than non-atomic — once tombstones land, the
+    * docs read as dead, a retry measures a ZERO retraction, and the
+    * stats stay skewed by the deleted docs' (n_docs, total_dl)
+    * forever. */
   def searchIndexDelete(spark: SparkSession, tableName: String,
       delIds: DataFrame, idCol: String): Unit = {
+    val log = IndexLog(spark, tableName)
     ensureStatsSchema(spark, tableName)
-    assertNoPendingFamilyCompact(spark, tableName, "searchIndexDelete")
-    // refuse under a pending partial APPEND (r18): the retraction
-    // measures doc lengths from `_docs`, which the partial append may
-    // not have written yet — deleting its docs now would retract zero
-    // while their postings keep ranking, permanently once the append
-    // completes
-    // generation + bookkeeping log in one job (see [[genAndStatsLog]])
-    val (gen0, bookkeeping) = genAndStatsLog(spark, tableName)
-    pendingAppend(spark, tableName, bookkeeping).foreach { d =>
-      throw new IllegalStateException(
-        s"$tableName: a prior append left a partial state (pending " +
-          s"marker $d without a completed stats row) — retry that " +
-          "append to completion before deleting (single-maintainer " +
-          "contract, see graft.ops.Bucketing)")
-    }
     val del = delIds.select(col(idCol).cast("long").as("doc_id"))
       .distinct().localCheckpoint(true)
-    val seq = gen0 + 1L
-    // order-free digest of THIS delete's id set: a retraction row is
-    // "already applied" only if both its sequence AND its digest match —
-    // a bare-seq check would mistake an ABANDONED partial delete's
-    // retraction (same next-seq, different ids) for this one's and
-    // silently skip the new retraction. XOR of per-id xxhash64: order-
-    // free AND overflow-free (ANSI mode throws on a long-sum overflow,
-    // and hash values span the full 64-bit range); the id set is
-    // distinct, so XOR self-cancellation cannot occur
+    // order-free digest of THIS delete's id set: an in-flight delete is
+    // "this delete's retry" only if the digests match — otherwise an
+    // ABANDONED partial delete's retraction would be mistaken for this
+    // one's. XOR of per-id xxhash64: order-free AND overflow-free (ANSI
+    // mode throws on a long-sum overflow, and hash values span the full
+    // 64-bit range); the id set is distinct, so XOR self-cancellation
+    // cannot occur
     val delSig = del.select(xxhash64(col("doc_id")).as("_h"))
       .agg(coalesce(expr("bit_xor(_h)"), lit(0L)))
       .first().getLong(0)
-    val prior = bookkeeping.collectFirst { case (s, d) if s == seq => d }
-    prior match {
-      case Some(sig) if sig == delSig => () // this delete's retry: applied
-      case Some(_) => throw new IllegalStateException(
-        s"$tableName: a PRIOR delete at sequence $seq left a partial " +
-          "retraction (stats row present, tombstones absent) for a " +
-          "DIFFERENT id set — retry that delete to completion (or " +
-          "rebuild) before issuing new deletes; proceeding would skew " +
-          "the corpus stats for every score (single-maintainer contract, " +
-          "see graft.ops.Bucketing)")
-      case None =>
-        // retraction measured BEFORE the tombstones land (the docs must
-        // still be live); eager so the later _del append cannot shift it
-        val retract = Bucketing.liveViewOf(
-            spark.table(tableName + "_docs"), spark, tableName + "_del",
-            "doc_id")
-          .join(del, "doc_id")
-          .agg((count(lit(1)) * -1L).cast("long").as("n_docs"),
-            (coalesce(sum("dl"), lit(0L)) * -1L).cast("long").as("total_dl"))
-          .withColumn("seq", lit(seq))
-          .withColumn("del_sig", lit(delSig))
-          .localCheckpoint(true)
-        Bucketing.appendTable(retract, tableName + "_stats")
+    val retry = log.pending match {
+      case None => false
+      case Some(IndexLog.Op("delete", sig, _)) if sig == delSig => true
+      case Some(op) => throw Bucketing.pendingError(log, op, "searchIndexDelete")
     }
-    Bucketing.tombstoneAppend(del, "doc_id", tableName, atSeq = seq)
+    if (!retry)
+      log.commit(gen = log.gen + 1L, wrote = Seq("_stats", "_del"),
+        op = Some(IndexLog.Op("delete", delSig)))
+    val seq = log.gen
+    if (!retry || spark.table(tableName + "_stats")
+        .filter(col("seq") === seq && col("del_sig") === delSig).isEmpty) {
+      // retraction measured BEFORE the tombstones land (the docs must
+      // still be live); eager so the later _del append cannot shift it
+      val retract = Bucketing.liveViewOf(
+          spark.table(tableName + "_docs"), spark, tableName + "_del",
+          "doc_id")
+        .join(del, "doc_id")
+        .agg((count(lit(1)) * -1L).cast("long").as("n_docs"),
+          (coalesce(sum("dl"), lit(0L)) * -1L).cast("long").as("total_dl"))
+        .withColumn("seq", lit(seq))
+        .withColumn("del_sig", lit(delSig))
+        .localCheckpoint(true)
+      Bucketing.appendTable(retract, tableName + "_stats")
+    }
+    Bucketing.writeTombstones(del, tableName, seq)
+    log.commit()
   }
 
   /** Fold tombstones into the posting base and the `_docs` side table
@@ -539,18 +394,16 @@ object TfIdf {
     * truncate `_del`. Probe results unchanged by construction. Returns
     * the live posting row count.
     *
-    * CRASH-CONVERGENT (r18 — the [[Bucketing]] staging protocol,
-    * extended to the family): the live `_docs` rows and the net stats
-    * row are staged DURABLY (while `_del` still exists — liveness needs
-    * the tombstones) before any destructive step, then the base
-    * compacts through [[Bucketing.tombstoneCompact]]'s own staged
-    * protocol, then `_docs` and `_stats` rewrite from the staged files.
-    * A retry after a failure at any point rolls the committed stagings
-    * forward — in particular, the dangling-retraction guard below is
-    * SKIPPED on the roll-forward path: after the base compact truncates
-    * `_del`, the not-yet-collapsed `_stats` rows would read as a
-    * pending delete (seq past the reset generation) and wrongly block
-    * the retry forever. */
+    * CRASH-CONVERGENT: the [[Bucketing]] staged protocol under the
+    * "bm25" tag, extended to the family — the live base and `_docs`
+    * rows and the net stats row are staged DURABLY (while `_del` still
+    * exists — liveness needs the tombstones) before any destructive
+    * step, then the base folds, then `_docs` and `_stats` rewrite from
+    * the staged files. A retry after a failure at any point rolls the
+    * stagings forward. A delete or append still in flight refuses the
+    * compact: netting a dangling retraction into the collapsed row while
+    * its docs stay live (their tombstones never landed) would bake in
+    * exactly the corpus-stats skew the retry machinery prevents. */
   def searchIndexCompact(spark: SparkSession, tableName: String,
       tableBuckets: Int = 32): Long =
     compactImpl(spark, tableName, tableBuckets, Int.MaxValue)
@@ -558,8 +411,8 @@ object TfIdf {
   /** [[searchIndexCompact]] with a crash-injection point — package-
     * visible so LifecycleRecoverySpec can replay every partial-compact
     * state. `failAfter` = persisted phases allowed before the injected
-    * crash: 1 = side-table stagings committed, 2 = + base compacted
-    * (`_del` truncated), 3 = + `_docs` rewritten. */
+    * crash: 1 = stagings committed, 2 = + base folded (`_del`
+    * truncated), 3 = + `_docs` rewritten. */
   private[graft] def compactImpl(spark: SparkSession, tableName: String,
       tableBuckets: Int, failAfter: Int): Long = {
     def hook(step: Int): Unit = if (step >= failAfter)
@@ -567,75 +420,34 @@ object TfIdf {
         s"[graft-test] injected crash after compact step $step")
     val stgDocs = tableName + "__compact_docs"
     val stgStats = tableName + "__compact_stats"
-    val rolling = Bucketing.stagedProtocol(spark, stgDocs).isDefined &&
-      Bucketing.stagedProtocol(spark, stgStats).isDefined
-    if (!rolling) {
+    Bucketing.stagedCompact(IndexLog(spark, tableName), "bm25",
+      Seq("", "_del", "_docs", "_stats"),
+      Seq(Bucketing.compactStagingName(tableName), stgDocs, stgStats)) {
       ensureStatsSchema(spark, tableName)
-      // r18 (r17 ADVICE, medium): a crashed searchIndexDelete leaves a
-      // DANGLING retraction — a _stats row whose seq is past the latest
-      // tombstone sequence (stats land BEFORE tombstones, the retry
-      // handle). Compacting over it would net the retraction into the
-      // collapsed stats row while the docs it retracted stay live
-      // (their tombstones never landed), then reset seq/del_sig to 0 —
-      // permanently and undetectably baking in exactly the corpus-stats
-      // skew the (seq, del_sig) retry machinery exists to prevent. Fail
-      // loudly instead: retry the pending delete to completion first
-      // (same contract as searchIndexDelete's digest-mismatch path).
-      val book = spark.table(tableName + "_stats")
-        .select("seq", "del_sig").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val pending = if (book.isEmpty) 0L else book.map(_._1).max
-      val gen = Bucketing.currentGen(spark, tableName)
-      if (pending > gen)
-        throw new IllegalStateException(
-          s"$tableName: a PRIOR delete at sequence $pending left a " +
-            s"partial retraction (stats row present, tombstones absent — " +
-            s"current generation is $gen) — retry that delete to " +
-            "completion before compacting; compacting now would bake " +
-            "its stats retraction into the collapsed row while the " +
-            "retracted docs stay live, skewing every future score " +
-            "(single-maintainer contract, see graft.ops.Bucketing)")
-      // and a pending partial APPEND (marker without a completed row)
-      // must finish first for the same reason: its partial rows would
-      // be compacted in as if complete, baking in the partiality
-      pendingAppend(spark, tableName, book).foreach { d =>
-        throw new IllegalStateException(
-          s"$tableName: a prior append left a partial state (pending " +
-            s"marker $d without a completed stats row) — retry that " +
-            "append to completion before compacting (single-maintainer " +
-            "contract, see graft.ops.Bucketing)")
-      }
-      // stage the side-table rewrites DURABLY while _del still exists
-      // (replaces the pre-r18 block-manager localCheckpoints: a crash
-      // no longer loses the only copy of the live rows)
+      Bucketing.stageLive(spark, tableName, "doc_id")
       Bucketing.writeTable(
         Bucketing.withGen(
           Bucketing.liveViewOf(spark.table(tableName + "_docs"), spark,
             tableName + "_del", "doc_id"), 0L),
         stgDocs)
-      Bucketing.commitStaging(spark, stgDocs, "bm25")
       Bucketing.writeTable(
         spark.table(tableName + "_stats")
           .agg(sum("n_docs").cast("long").as("n_docs"),
             sum("total_dl").cast("long").as("total_dl"))
           .withColumn("seq", lit(0L)).withColumn("del_sig", lit(0L)),
         stgStats)
-      Bucketing.commitStaging(spark, stgStats, "bm25")
-    } else System.err.println(
-      s"[graft] $tableName: rolling forward a previously staged " +
-        "searchIndexCompact")
-    hook(1)
-    val n = Bucketing.tombstoneCompact(spark, tableName, "doc_id", "term",
-      tableBuckets)
-    hook(2)
-    Bucketing.writeTable(Bucketing.stagingRows(spark, stgDocs),
-      tableName + "_docs")
-    hook(3)
-    Bucketing.writeTable(Bucketing.stagingRows(spark, stgStats),
-      tableName + "_stats")
-    Bucketing.dropStaging(spark, stgDocs)
-    Bucketing.dropStaging(spark, stgStats)
-    n
+    } {
+      hook(1)
+      val n = Bucketing.foldStaged(spark, tableName, "doc_id", "term",
+        tableBuckets)
+      hook(2)
+      Bucketing.writeTable(Bucketing.stagingRows(spark, stgDocs),
+        tableName + "_docs")
+      hook(3)
+      Bucketing.writeTable(Bucketing.stagingRows(spark, stgStats),
+        tableName + "_stats")
+      n
+    }
   }
 
   /** BM25-score a query against a [[searchIndexBuild]] table. Result
@@ -809,18 +621,14 @@ object TfIdf {
       tableName, "tg", tableBuckets)
   }
 
-  private def trigramPostings(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    trigramPostings(docs, idCol, textCol, buckets = 0)
-
-  /** `buckets > 0` re-clusters the exploded postings by the bucket key
-    * before a bucketed write: the r18 fanOut multiplied output files to
-    * (tasks × buckets) per write — this one exchange restores one file
-    * per bucket per write (repartition's hash ≡ the bucket hash, so
-    * partition p holds exactly bucket p), which the bucket-pruned
-    * probes re-read forever (r18 ADVICE; guide §6 output file sizing).
-    * fanOut stays: the CPU-heavy explode still runs at session
-    * parallelism BELOW the exchange. */
+  /** The exploded postings, re-clustered by the bucket key for a
+    * bucketed write of `buckets` buckets: the r18 fanOut multiplied
+    * output files to (tasks × buckets) per write — this one exchange
+    * restores one file per bucket per write (repartition's hash ≡ the
+    * bucket hash, so partition p holds exactly bucket p), which the
+    * bucket-pruned probes re-read forever (r18 ADVICE; guide §6 output
+    * file sizing). fanOut stays: the CPU-heavy explode still runs at
+    * session parallelism BELOW the exchange. */
   private def trigramPostings(docs: DataFrame, idCol: String,
       textCol: String, buckets: Int): DataFrame = {
     val n = length(col(textCol))
@@ -834,7 +642,7 @@ object TfIdf {
         explode(when(n < 3, array().cast("array<string>"))
           .otherwise(array_distinct(transform(sequence(lit(1), n - 2),
             i => col(textCol).substr(i, lit(3)))))).as("tg"))
-    if (buckets > 0) tg.repartition(buckets, col("tg")) else tg
+    tg.repartition(buckets, col("tg"))
   }
 
   /** Append a new document batch to a [[trigramIndexBuild]] table —
@@ -843,9 +651,8 @@ object TfIdf {
     * safe under any live probe). */
   def trigramIndexAppend(newDocs: DataFrame, idCol: String,
       textCol: String, tableName: String, tableBuckets: Int = 32): Unit =
-    Bucketing.appendBucketed(
-      Bucketing.withGen(trigramPostings(newDocs, idCol, textCol, tableBuckets),
-        Bucketing.currentGen(newDocs.sparkSession, tableName)),
+    Bucketing.appendAtGen(
+      trigramPostings(newDocs, idCol, textCol, tableBuckets),
       tableName, "tg", tableBuckets)
 
   /** Tombstone RETRACTION for a [[trigramIndexBuild]] table (r16 — the

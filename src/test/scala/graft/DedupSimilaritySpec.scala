@@ -803,7 +803,7 @@ class DedupSimilaritySpec extends SparkSpec {
       val kernel = call_function("graft_centroid_argmax", col("v"),
         typedLit(cents.flatten.toIndexedSeq),
         typedLit(graft.ops.Similarity.centroidBias(cents, cosine).toIndexedSeq))
-      val hof = graft.ops.Similarity.centroidArgmaxHof(col("v"), cents, cosine)
+      val hof = KernelTwins.centroidArgmaxHof(col("v"), cents, cosine)
       val diff = e.select(col("vec_id"), kernel.as("a"), hof.as("b"))
         .filter(!(col("a") <=> col("b"))).count()
       assert(diff == 0, s"kernel diverged from HOF on $diff rows (cosine=$cosine)")
@@ -1252,7 +1252,7 @@ class DedupSimilaritySpec extends SparkSpec {
           else lit(i.toDouble)): _*)))
     for (squared <- Seq(true, false)) {
       val kernel = Similarity.adcTablesCol(col("v"), cbs, squared)
-      val hof = Similarity.adcTablesHof(col("v"), cbs, squared)
+      val hof = KernelTwins.adcTablesHof(col("v"), cbs, squared)
       for (src <- Seq(e, degen)) {
         val diff = src.select(col("vec_id"), kernel.as("a"), hof.as("b"))
           .filter(!(col("a") <=> col("b"))).count()
@@ -1300,7 +1300,7 @@ class DedupSimilaritySpec extends SparkSpec {
         typedLit(cents.flatten.toIndexedSeq),
         typedLit(Similarity.centroidBias(cents, cosine = false).toIndexedSeq),
         lit(nprobe))
-      val hof = Similarity.coarseProbeCellsHof(col("v"), cents, nprobe)
+      val hof = KernelTwins.coarseProbeCellsHof(col("v"), cents, nprobe)
       for (src <- Seq(e, degen)) {
         val diff = src.select(col("vec_id"), kernel.as("a"), hof.as("b"))
           .filter(!(col("a") <=> col("b"))).count()
@@ -1343,7 +1343,7 @@ class DedupSimilaritySpec extends SparkSpec {
           call_function("graft_residual", transform(col("v"), _.cast("double")),
             cellCol.cast("int"), typedLit(cents.flatten.toIndexedSeq),
             lit(cents.length)).as("a"),
-          Similarity.residualColHof(col("v"), cellCol, cents).as("b"))
+          KernelTwins.residualColHof(col("v"), cellCol, cents).as("b"))
         .filter(!(col("a") <=> col("b"))).count()
     assert(diffOn(e, cell) == 0, "kernel diverged from HOF on real cells")
     assert(diffOn(degen, col("c")) == 0, "kernel diverged from HOF on degenerate rows")
@@ -1364,7 +1364,7 @@ class DedupSimilaritySpec extends SparkSpec {
     def kernelCol = call_function("graft_centroid_argmax", col("v"),
       typedLit(cents.flatten.toIndexedSeq),
       typedLit(Similarity.centroidBias(cents, cosine = false).toIndexedSeq))
-    def hofCol = Similarity.centroidArgmaxHof(col("v"), cents, cosine = false)
+    def hofCol = KernelTwins.centroidArgmaxHof(col("v"), cents, cosine = false)
     // a NaN ELEMENT poisons every centroid's dot product, so all scores
     // are NaN and both forms keep index 0 — no divergence
     val nan = Seq((1L, Seq(Double.NaN, 1.0)), (2L, Seq(1.0, Double.NaN)))

@@ -608,40 +608,43 @@ class LayoutBucketingSpec extends SparkSpec {
     }
   }
 
-  test("single-maintainer contract: generation stamping is read-then-append — concurrent maintainers are outside the contract") {
-    // r17 (r16 verdict item 2): [[Bucketing.currentGen]] deliberately
-    // has no coordination. This pin makes the assumption INSPECTABLE
-    // rather than implicit: two maintainers that each read the
-    // generation before either appends would stamp the SAME delete
-    // sequence (their deletes become indistinguishable, and an append
-    // racing them gets an ordering neither chose) — which is why every
-    // mutating lifecycle op requires ONE maintainer per index at a
-    // time (scaladoc atop Bucketing's lifecycle section). The same
-    // maintainer RETRYING a failed op is inside the contract
-    // (TfIdfSpec's searchIndexDelete retry case).
-    import graft.ops.{Bucketing, Dedup}
+  test("two maintainers on one log head: exactly one delete commits, the other fails with the conflict error; the live view is the winner's") {
+    // Two maintainers that read the same log head would stamp the SAME
+    // delete sequence. The log turns that race from "outside the
+    // contract" into a detected conflict: each lifecycle op commits the
+    // next log version before its data write, so the loser's commit
+    // finds the version taken and fails having written nothing.
+    import graft.ops.{Bucketing, Dedup, IndexLog}
     import spark.implicits._
     val docs = spark.range(12).select(col("id").as("doc_id"),
       concat(lit("maintainer contract fixture "), col("id")).as("text"))
+    val fps = docs.select(
+      graft.functions.TextFunctions.fingerprint(col("text")).as("fp"),
+      col("doc_id"))
     val tbl = "graft_spec_maintainer"
     try {
       Dedup.dedupIndexBuild(docs, "text", "doc_id", tbl, tableBuckets = 4)
-      // what two concurrent maintainers would do: both read gen first
-      val seqA = Bucketing.currentGen(spark, tbl) + 1L
-      val seqB = Bucketing.currentGen(spark, tbl) + 1L
-      assert(seqA == seqB,
-        "read-then-append: concurrent maintainers WOULD stamp the same " +
-          "sequence — the documented reason the contract is single-maintainer")
-      // the contract in use: one maintainer, sequential ops → strictly
-      // increasing sequences, one per delete
-      Dedup.dedupIndexDelete(spark, tbl,
-        docs.filter(col("doc_id") === 1L), "text")
-      val g1 = Bucketing.currentGen(spark, tbl)
+      val a = IndexLog(spark, tbl)
+      val b = IndexLog(spark, tbl)
+      assert(a.gen == b.gen, "both maintainers hold the same head")
+      Bucketing.tombstoneAppend(
+        fps.filter(col("doc_id") === 1L).select("fp"), "fp", a)
+      val ex = intercept[IndexLog.ConflictException](
+        Bucketing.tombstoneAppend(
+          fps.filter(col("doc_id") === 2L).select("fp"), "fp", b))
+      assert(ex.index == tbl && ex.getMessage.contains("another maintainer"),
+        ex.getMessage)
+      val live = Dedup.liveFingerprintIndex(spark, tbl)
+        .select("first_id").as[Long].collect().toSet
+      assert(live == (0L until 12L).toSet - 1L,
+        s"the live view must be the winner's delete alone: $live")
+      assert(spark.table(tbl + "_del").select("seq").as[Long].collect()
+        .toSeq == Seq(a.gen), "only the winner's tombstones landed")
+      // the loser re-runs on a fresh head: strictly the next sequence
       Dedup.dedupIndexDelete(spark, tbl,
         docs.filter(col("doc_id") === 2L), "text")
-      val g2 = Bucketing.currentGen(spark, tbl)
-      assert(g1 == seqA && g2 == g1 + 1L,
-        s"sequential maintenance must stamp strictly increasing seqs: $g1, $g2")
+      assert(IndexLog(spark, tbl).gen == a.gen + 1L)
+      assert(Dedup.liveFingerprintIndex(spark, tbl).count() == 10L)
     } finally
       Seq(tbl, tbl + "_del").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS `$t`"))
@@ -649,20 +652,19 @@ class LayoutBucketingSpec extends SparkSpec {
 
   test("RefreshEnvelope: persisted per-table write counter counts every lifecycle op; guard trips on the second write") {
     // r17 (r16 verdict item 1, batch half — the live-stream trip is in
-    // StreamingSpec): every Bucketing write path bumps a persisted
-    // counter file, capture() snapshots it, and staleTables/assertFresh
+    // StreamingSpec): every lifecycle step counts its writes in the
+    // index log, captureIndex() snapshots them, and staleTables/assertFresh
     // flag a table written MORE THAN ONCE since capture (the first
     // write is inside the measured envelope — visible to a running
     // stream — so it must NOT trip).
-    import graft.ops.{Bucketing, Dedup, RefreshEnvelope}
-    import spark.implicits._
+    import graft.ops.{Dedup, IndexLog, RefreshEnvelope}
     val docs = spark.range(16).select(col("id").as("doc_id"),
       concat(lit("envelope counter fixture "), col("id")).as("text"))
     val tbl = "graft_spec_envelope_ctr"
     try {
-      val before = RefreshEnvelope.writeCount(spark, tbl)
+      val before = IndexLog(spark, tbl).writeCount(tbl)
       Dedup.dedupIndexBuild(docs, "text", "doc_id", tbl, tableBuckets = 4)
-      assert(RefreshEnvelope.writeCount(spark, tbl) == before + 1,
+      assert(IndexLog(spark, tbl).writeCount(tbl) == before + 1,
         "build must record one write on the base table")
       assert(RefreshEnvelope.tablesOf(spark, tbl).toSet ==
         Set(tbl, tbl + "_del"), "family discovery: base + tombstones")
@@ -699,8 +701,7 @@ class LayoutBucketingSpec extends SparkSpec {
     // a probe plans in: searchIndexAppend touches base + _docs +
     // _stats; searchIndexDelete touches _del + _stats (the postings are
     // suppressed via _del, not rewritten).
-    import graft.ops.{Dedup, RefreshEnvelope, TfIdf}
-    import spark.implicits._
+    import graft.ops.{Dedup, IndexLog, RefreshEnvelope, TfIdf}
     val docs = spark.range(24).select(col("id").as("doc_id"),
       concat(lit("family isolation fixture text "), col("id")).as("text"))
     val a = "graft_spec_env_fam_a" // BM25 posting index
@@ -713,8 +714,11 @@ class LayoutBucketingSpec extends SparkSpec {
         "BM25 family discovery must include every side table")
       val guardA = RefreshEnvelope.captureIndex(spark, a)
       val guardB = RefreshEnvelope.captureIndex(spark, b)
-      val before = Seq(a, a + "_docs", a + "_stats", a + "_del")
-        .map(t => RefreshEnvelope.writeCount(spark, t))
+      def counts() = {
+        val log = IndexLog(spark, a)
+        Seq(a, a + "_docs", a + "_stats", a + "_del").map(log.writeCount)
+      }
+      val before = counts()
       // two deletes on B: B's guard trips, A's must stay quiet
       Dedup.dedupIndexDelete(spark, b, docs.filter(col("doc_id") === 1L), "text")
       Dedup.dedupIndexDelete(spark, b, docs.filter(col("doc_id") === 2L), "text")
@@ -727,8 +731,7 @@ class LayoutBucketingSpec extends SparkSpec {
       TfIdf.searchIndexAppend(
         docs.select(col("doc_id") + 1000L as "doc_id", col("text")),
         "doc_id", "text", a, tableBuckets = 4)
-      val after = Seq(a, a + "_docs", a + "_stats", a + "_del")
-        .map(t => RefreshEnvelope.writeCount(spark, t))
+      val after = counts()
       assert(after.zip(before).map { case (x, y) => x - y } ==
         Seq(1L, 1L, 1L, 0L),
         s"append must count base/_docs/_stats once each: $before -> $after")
@@ -795,7 +798,7 @@ class LayoutBucketingSpec extends SparkSpec {
         .collect().map(_.toString).sorted.toSeq
       // 3 tombstoned keys < the 1M default: not advised, nothing runs
       assert(Bucketing.maintainIfAdvised(spark, tbl, "fp", "fp", 4).isEmpty)
-      assert(Bucketing.currentGen(spark, tbl) > 0L,
+      assert(graft.ops.IndexLog(spark, tbl).gen > 0L,
         "not-advised must leave the delete set untouched")
       spark.conf.set(Bucketing.CompactThresholdConf, "3")
       // advised + a live probe OVER THIS INDEX: refuse, naming it
@@ -836,12 +839,11 @@ class LayoutBucketingSpec extends SparkSpec {
   }
 
   test("RefreshEnvelope counters honor the conf-selectable directory — the object-store escape hatch") {
-    // r18 (r17 verdict item 3): the counter scheme requires an
-    // atomic-rename filesystem; on an object-store warehouse the
-    // counters route to a rename-atomic store via CounterDirConf while
-    // the data stays put. Pin: the conf moves the counter file, and
-    // reads follow the same conf.
-    import graft.ops.RefreshEnvelope
+    // r18 (r17 verdict item 3): the index log requires an atomic
+    // no-overwrite rename; on an object-store warehouse it routes to a
+    // rename-atomic store via CounterDirConf while the data stays put.
+    // Pin: the conf moves the log, and reads follow the same conf.
+    import graft.ops.{Dedup, IndexLog, RefreshEnvelope}
     val dir = java.nio.file.Files.createTempDirectory("graft_env_ctr")
       .toString
     val t = "graft_spec_ctr_dir_tbl"
@@ -851,15 +853,27 @@ class LayoutBucketingSpec extends SparkSpec {
     // the temp dir for the duration of the test
     val s2 = spark.newSession()
     s2.conf.set(RefreshEnvelope.CounterDirConf, dir)
-    assert(RefreshEnvelope.writeCount(s2, t) == 0L)
-    RefreshEnvelope.recordWrite(s2, t)
-    RefreshEnvelope.recordWrite(s2, t)
-    assert(RefreshEnvelope.writeCount(s2, t) == 2L)
-    assert(new java.io.File(dir, t + ".__writes").isFile,
-      s"counter must land under $dir")
-    // the suite session never saw the conf: reads stay on the
-    // warehouse dir, where nothing landed
-    assert(RefreshEnvelope.writeCount(spark, t) == 0L,
-      "no counter may leak into the warehouse dir")
+    val fs = IndexLog.path(spark, t)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(IndexLog.path(spark, t), true)
+    val docs = s2.range(6).select(col("id").as("doc_id"),
+      concat(lit("counter dir fixture "), col("id")).as("text"))
+    try {
+      assert(IndexLog(s2, t).writeCount(t) == 0L)
+      Dedup.dedupIndexBuild(docs, "text", "doc_id", t, tableBuckets = 4)
+      Dedup.dedupIndexDelete(s2, t, docs.filter(col("doc_id") === 1L), "text")
+      assert(IndexLog(s2, t).writeCount(t) == 1L &&
+        IndexLog(s2, t).writeCount(t + "_del") == 2L)
+      assert(new java.io.File(dir, t + ".__log").isDirectory,
+        s"the log must land under $dir")
+      // the suite session never saw the conf: reads stay on the
+      // default root, where nothing landed
+      assert(!fs.exists(IndexLog.path(spark, t)) &&
+        IndexLog(spark, t).writeCount(t) == 0L,
+        "no log may leak into the default root")
+    } finally {
+      Seq(t, t + "_del").foreach(x => s2.sql(s"DROP TABLE IF EXISTS `$x`"))
+      fs.delete(IndexLog.path(spark, t), true)
+    }
   }
 }

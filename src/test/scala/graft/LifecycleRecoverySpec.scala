@@ -2,32 +2,32 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{Bucketing, TfIdf}
+import graft.ops.{Bucketing, IndexLog, TfIdf}
 
-/** Crash-convergence of the index-maintenance lifecycle (r18).
+/** Crash-convergence of the index-maintenance lifecycle (r18), every
+  * crash window expressed against the index's [[IndexLog]]: the
+  * in-flight operation in the log head is the crash state a retry
+  * rolls forward and every other lifecycle op refuses.
   *
-  * r17 made the BM25 delete retryable across its two non-atomic
-  * appends; this suite pins the r18 completion of that arc — EVERY
-  * multi-write lifecycle op now converges under retry-after-failure
-  * (the single-maintainer contract's explicit inclusion):
+  * EVERY multi-write lifecycle op converges under retry-after-failure:
   *
   *   - [[Bucketing.tombstoneCompact]] / [[Bucketing.compactBucketed]]
-  *     snapshot the live rows to a DURABLE protocol-tagged staging
-  *     table before any destructive step and roll it forward on retry —
+  *     snapshot the live rows to a DURABLE staging table and commit
+  *     the compact in flight (protocol-tagged) before any destructive
+  *     step, and roll it forward on retry —
   *     a crash that destroys the base mid-rewrite is recovered from the
   *     staged files, and re-inserted (revived) keys survive the crash
   *     window between the `_del` truncate and the base rewrite (the
   *     pre-r18 ordering lost them PERMANENTLY: gen-0 rewritten rows
   *     read as suppressed under leftover tombstones, so the retry's
   *     live view excluded them);
-  *   - lifecycle appends/deletes fail LOUDLY while a committed staging
-  *     is pending (a stale snapshot rolled forward would silently erase
+  *   - lifecycle appends/deletes fail LOUDLY while a compact is in
+  *     flight (a stale snapshot rolled forward would silently erase
   *     them), and a rebuild supersedes the pending compact;
   *   - [[TfIdf.searchIndexAppend]] is retryable across its three
-  *     non-atomic appends via a pending-marker FILE + gen-salted batch
-  *     digest (no extra family-table write — the refresh envelope of a
-  *     running stream is untouched), converging with no doubled
-  *     postings from every partial state;
+  *     non-atomic appends via its in-flight log entry + gen-salted
+  *     batch digest, converging with no doubled postings from every
+  *     partial state;
   *   - [[TfIdf.searchIndexCompact]] stages its side-table rewrites and
   *     rolls forward — in particular the r18 dangling-retraction guard
   *     must NOT false-fire on the retry of a compact that crashed after
@@ -53,8 +53,12 @@ class LifecycleRecoverySpec extends SparkSpec {
   private def cleanup(names: String*): Unit = names.foreach { n =>
     Seq("", "_del", "_docs", "_stats", "_meta", "__compact",
       "__compact_docs", "__compact_stats").foreach(s => dropTable(n + s))
-    TfIdf.clearAppendMarker(spark, n)
+    val log = IndexLog.path(spark, n)
+    log.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(log, true)
   }
+
+  private def inFlight(name: String): Option[IndexLog.Op] =
+    IndexLog(spark, name).pending
 
   test("tombstoneCompact: staged roll-forward recovers a destroyed base and keeps revived keys") {
     val tbl = "graft_spec_lcr_tomb"
@@ -66,7 +70,7 @@ class LifecycleRecoverySpec extends SparkSpec {
       // generation — the crash-window victim the pre-r18 ordering lost
       import spark.implicits._
       Bucketing.tombstoneAppend(Seq(3L, 7L).toDF("k"), "k", tbl)
-      val gen = Bucketing.currentGen(spark, tbl)
+      val gen = IndexLog(spark, tbl).gen
       assert(gen == 1L)
       Bucketing.appendBucketed(
         Bucketing.withGen(Seq((3L, "v3-revived")).toDF("k", "v"), gen),
@@ -78,8 +82,7 @@ class LifecycleRecoverySpec extends SparkSpec {
       assert(liveSet() == expected)
       // ---- crash window 1: staging committed, nothing destructive ----
       Bucketing.stageTombstoneCompact(spark, tbl, "k")
-      assert(Bucketing.stagedProtocol(spark,
-        Bucketing.compactStagingName(tbl)).contains("tombstone"))
+      assert(inFlight(tbl).map(_.protocol).contains("tombstone"))
       assert(liveSet() == expected,
         "a committed staging snapshot must be invisible to probes")
       // lifecycle writes refuse while the snapshot is pending: rolled
@@ -109,8 +112,8 @@ class LifecycleRecoverySpec extends SparkSpec {
       assert(spark.table(tbl).as[(Long, String, Long)].collect()
         .forall(_._3 == 0L), "compacted rows must be generation 0")
       assert(spark.table(tbl + "_del").isEmpty)
-      assert(Bucketing.stagedProtocol(spark,
-        Bucketing.compactStagingName(tbl)).isEmpty,
+      assert(inFlight(tbl).isEmpty &&
+        !spark.catalog.tableExists(Bucketing.compactStagingName(tbl)),
         "the staging snapshot must be gone after the compact completes")
       // lifecycle writes work again
       Bucketing.appendBucketed(
@@ -127,13 +130,12 @@ class LifecycleRecoverySpec extends SparkSpec {
       Bucketing.initTombstones(df, "k", tbl)
       Bucketing.writeBucketed(Bucketing.withGen(df, 0L), tbl, "k", 4)
       Bucketing.tombstoneAppend(Seq(7L).toDF("k"), "k", tbl)
-      // a crash DURING the staging write leaves files but no marker —
-      // garbage, overwritten by the fresh attempt
+      // a crash DURING the staging write leaves files but no in-flight
+      // compact in the log — garbage, overwritten by the fresh attempt
       Bucketing.writeBucketed(
         Bucketing.withGen(Seq((999L, "junk")).toDF("k", "v"), 0L),
         Bucketing.compactStagingName(tbl), "k", 4)
-      assert(Bucketing.stagedProtocol(spark,
-        Bucketing.compactStagingName(tbl)).isEmpty)
+      assert(inFlight(tbl).isEmpty)
       val n = Bucketing.tombstoneCompact(spark, tbl, "k", "k", 4)
       assert(n == 19L)
       assert(!Bucketing.liveView(spark, tbl, "k").as[(Long, String)]
@@ -145,8 +147,8 @@ class LifecycleRecoverySpec extends SparkSpec {
       Bucketing.stageTombstoneCompact(spark, tbl, "k")
       Bucketing.initTombstones(df, "k", tbl)
       Bucketing.writeBucketed(Bucketing.withGen(df, 0L), tbl, "k", 4)
-      assert(Bucketing.stagedProtocol(spark,
-        Bucketing.compactStagingName(tbl)).isEmpty,
+      assert(inFlight(tbl).isEmpty &&
+        !spark.catalog.tableExists(Bucketing.compactStagingName(tbl)),
         "a rebuild must discard the pending compact staging")
       assert(Bucketing.liveView(spark, tbl, "k").count() == 20L)
     } finally cleanup("graft_spec_lcr_uncommitted")
@@ -205,19 +207,18 @@ class LifecycleRecoverySpec extends SparkSpec {
       val df = baseRows(spark)
       Bucketing.writeBucketed(df, tbl, "k", 4)
       Bucketing.appendBucketed(Seq((21L, "v21")).toDF("k", "v"), tbl, "k", 4)
-      // simulate the crash: the staging half ran (snapshot + layout
-      // marker), then the base rewrite died after its DROP
+      // simulate the crash: the staging half ran (snapshot + the layout
+      // compact committed in flight), then the base rewrite died after
+      // its DROP
       Bucketing.writeTable(spark.table(tbl),
         Bucketing.compactStagingName(tbl))
-      Bucketing.commitStaging(spark,
-        Bucketing.compactStagingName(tbl), "layout")
+      IndexLog(spark, tbl).commit(op = Some(IndexLog.Op("compact", 0L, "layout")))
       dropTable(tbl)
       val n = Bucketing.compactBucketed(spark, tbl, "k", 4)
       assert(n == 21L)
       assert(spark.table(tbl).as[(Long, String)].collect().toSet ==
         ((1L to 20L).map(k => (k, s"v$k")).toSet + ((21L, "v21"))))
-      assert(Bucketing.stagedProtocol(spark,
-        Bucketing.compactStagingName(tbl)).isEmpty)
+      assert(inFlight(tbl).isEmpty)
     } finally cleanup("graft_spec_lcr_layout")
   }
 
@@ -284,7 +285,7 @@ class LifecycleRecoverySpec extends SparkSpec {
     try {
       TfIdf.searchIndexBuild(base, "doc_id", "text", tbl, tableBuckets = 4)
       intercept[IllegalStateException](TfIdf.appendImpl(
-        batch, "doc_id", "text", tbl, 4, 2)) // marker + postings landed
+        batch, "doc_id", "text", tbl, 4, 2)) // in flight + postings landed
       // a DIFFERENT append, a delete, and a compact all refuse
       val exA = intercept[IllegalStateException](TfIdf.searchIndexAppend(
         other, "doc_id", "text", tbl, tableBuckets = 4))
@@ -300,12 +301,14 @@ class LifecycleRecoverySpec extends SparkSpec {
       TfIdf.searchIndexAppend(batch, "doc_id", "text", tbl, tableBuckets = 4)
       TfIdf.searchIndexDelete(spark, tbl, Seq(2L).toDF("doc_id"), "doc_id")
       // an append under a pending partial DELETE refuses: its rows
-      // would be stamped with the stale generation and suppressed when
-      // the delete's tombstones land
-      val gen = Bucketing.currentGen(spark, tbl)
+      // would be stamped below the delete's sequence and suppressed when
+      // its tombstones land. Crash state: the delete committed in
+      // flight and its retraction row landed, its tombstones did not
+      val log = IndexLog(spark, tbl)
+      log.commit(gen = log.gen + 1L, op = Some(IndexLog.Op("delete", 42L)))
       Bucketing.appendTable(
         spark.range(1).select(lit(-1L).as("n_docs"), lit(-5L).as("total_dl"),
-          lit(gen + 1L).as("seq"), lit(42L).as("del_sig")),
+          lit(log.gen).as("seq"), lit(42L).as("del_sig")),
         tbl + "_stats")
       val exPD = intercept[IllegalStateException](TfIdf.searchIndexAppend(
         docs.filter(col("doc_id") % 8 === 3), "doc_id", "text", tbl,
@@ -344,9 +347,10 @@ class LifecycleRecoverySpec extends SparkSpec {
           spark.table(twin + "_docs").count(),
           s"failAfter=$failAfter: _docs rewritten to live rows exactly")
         bm25Compare(tbl, twin, terms)
-        assert(Bucketing.stagedProtocol(spark, tbl + "__compact_docs").isEmpty
-          && Bucketing.stagedProtocol(spark, tbl + "__compact_stats").isEmpty,
-          s"failAfter=$failAfter: stagings cleaned up")
+        assert(inFlight(tbl).isEmpty &&
+          Seq("__compact", "__compact_docs", "__compact_stats")
+            .forall(s => !spark.catalog.tableExists(tbl + s)),
+          s"failAfter=$failAfter: compact committed, stagings cleaned up")
       }
       // maintainIfAdvised rolls a pending compact forward even below
       // the advisory threshold (lifecycle writes are refusing until it

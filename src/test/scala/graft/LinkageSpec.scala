@@ -475,7 +475,7 @@ class LinkageSpec extends SparkSpec {
           5 -> (1 to nseg).map(j => math.min(5, j))))
       for (bounds <- boundsVariants) {
         val kernel = collected(Linkage.dirtySegKeys(d, tau, bounds))
-        val hof = collected(Linkage.dirtySegKeysHof(d, tau, bounds))
+        val hof = collected(KernelTwins.dirtySegKeysHof(d, tau, bounds))
         assert(kernel == hof,
           s"τ=$tau bounds=$bounds: kernel ${kernel.size} keys vs HOF ${hof.size}" +
             s"; first diff: ${kernel.diff(hof).take(3)} / ${hof.diff(kernel).take(3)}")
@@ -487,5 +487,16 @@ class LinkageSpec extends SparkSpec {
         clean, "c_id", "c_s", tau = 2, adaptiveSample = 0)
       .queryExecution.executedPlan.toString
     assert(p.contains("graft_seg_keys"), p.take(800))
+  }
+
+  test("graft_seg_keys: a bounds entry with fewer than τ+1 starts fails at analysis, naming the length and τ") {
+    // the kernel indexes starts(i) for i < τ+1 unchecked: a short `_meta`
+    // entry used to surface as an executor IndexOutOfBoundsException
+    val d = Seq((1L, "Customer#000000123")).toDF("d_id", "d_s")
+    val ex = intercept[IllegalArgumentException](
+      Linkage.dirtySegKeys(d, 2, Map(18 -> Seq(1, 7))))
+    assert(ex.getMessage.contains("length 18") &&
+      ex.getMessage.contains("2 segment starts") &&
+      ex.getMessage.contains("τ = 2"), ex.getMessage)
   }
 }

@@ -194,7 +194,7 @@ class PropertySpec extends SparkSpec {
       val kernel = docs.select(col("doc_id"),
         TextFunctions.termCounts(col("text")).as("tc"))
       val hof = docs.select(col("doc_id"),
-        TextFunctions.termCountsHof(col("text")).as("tc"))
+        KernelTwins.termCountsHof(col("text")).as("tc"))
       // exceptAll on the whole array pins element ORDER, not just content
       assert(kernel.exceptAll(hof).isEmpty && hof.exceptAll(kernel).isEmpty,
         s"seed=$seed: kernel and HOF termCounts diverge")

@@ -34,7 +34,7 @@ class TfIdfSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     for (d <- Seq(edge, Tables.documents(spark, sf).select(col("doc_id"), col("text")))) {
       val kernel = d.select(col("doc_id"), TextFunctions.termCounts(col("text")).as("tc"))
-      val hof = d.select(col("doc_id"), TextFunctions.termCountsHof(col("text")).as("tc"))
+      val hof = d.select(col("doc_id"), KernelTwins.termCountsHof(col("text")).as("tc"))
       // whole-array comparison: order inside the array must match too
       assert(kernel.exceptAll(hof).isEmpty && hof.exceptAll(kernel).isEmpty,
         "kernel and HOF termCounts must agree including array order")
@@ -424,25 +424,29 @@ class TfIdfSpec extends SparkSpec {
   }
 
   test("searchIndexDelete retry: partial failure (stats landed, tombstones did not) converges exactly") {
-    // r16 ADVICE: the delete's two appends are not atomic. The
-    // retraction row is stamped with the delete SEQUENCE and written
-    // FIRST, so re-running the same delete after a crash between the
-    // two appends detects the already-applied retraction (currentGen is
-    // unchanged — the tombstones never landed — so the retry computes
-    // the same seq and finds it in _stats), skips it, and completes the
-    // tombstone append: no double-retract, exact final state.
-    import graft.ops.Bucketing
+    // r16 ADVICE: the delete's two appends are not atomic. The delete
+    // is committed in flight on the index log (claiming its sequence
+    // under its id-set digest) and the retraction row, stamped with the
+    // sequence and digest, is written FIRST, so re-running the same
+    // delete after a crash between the two appends finds its own delete
+    // in flight, sees the already-applied retraction in _stats, skips
+    // it, and completes the tombstone append: no double-retract, exact
+    // final state.
+    import graft.ops.{Bucketing, IndexLog}
     val docs = Tables.documents(spark, sf)
     val tbl = "graft_spec_inv_retry"
     try {
       TfIdf.searchIndexBuild(docs, "doc_id", "text", tbl, tableBuckets = 4)
       val delIds = docs.filter(col("doc_id") % 5 === 0).select("doc_id")
       // simulate the crash: replay ONLY the first half of the delete —
-      // the (seq, digest)-stamped retraction — tombstones unwritten
-      val seq = Bucketing.currentGen(spark, tbl) + 1L
+      // the in-flight commit and the (seq, digest)-stamped retraction —
+      // tombstones unwritten
+      val log = IndexLog(spark, tbl)
+      val seq = log.gen + 1L
       val sig = delIds.select(col("doc_id").cast("long").as("doc_id"))
         .distinct().select(xxhash64(col("doc_id")).as("_h"))
         .agg(expr("bit_xor(_h)")).as[Long].head()
+      log.commit(gen = seq, op = Some(IndexLog.Op("delete", sig)))
       spark.table(tbl + "_docs").join(delIds, "doc_id")
         .agg((count(lit(1)) * -1L).cast("long").as("n_docs"),
           (coalesce(sum("dl"), lit(0L)) * -1L).cast("long").as("total_dl"))
@@ -451,9 +455,9 @@ class TfIdfSpec extends SparkSpec {
         .format("parquet").saveAsTable(tbl + "_stats")
       assert(spark.table(tbl + "_del").isEmpty,
         "crash state: stats retracted, no tombstones yet")
-      // a DIFFERENT delete while the partial one is pending must fail
-      // LOUDLY (same claimed seq, different id set): silently skipping
-      // ITS retraction would skew every score — and silently applying
+      // a DIFFERENT delete while the partial one is in flight must fail
+      // LOUDLY (a different id set than the in-flight one): silently
+      // skipping ITS retraction would skew every score — and silently applying
       // it would leave the abandoned delete's retraction dangling
       val ex0 = intercept[IllegalStateException](
         TfIdf.searchIndexDelete(spark, tbl,
@@ -499,18 +503,21 @@ class TfIdfSpec extends SparkSpec {
     // del_sig) retry machinery exists to prevent. Compact must fail
     // loudly instead, with the same retry-to-completion contract as
     // searchIndexDelete's digest-mismatch path.
-    import graft.ops.Bucketing
+    import graft.ops.IndexLog
     val docs = Tables.documents(spark, sf)
     val tbl = "graft_spec_inv_cmp_dangle"
     try {
       TfIdf.searchIndexBuild(docs, "doc_id", "text", tbl, tableBuckets = 4)
       val delIds = docs.filter(col("doc_id") % 7 === 0).select("doc_id")
-      // crash state: the (seq, digest)-stamped retraction landed, the
-      // tombstone append did not (stats land FIRST by design)
-      val seq = Bucketing.currentGen(spark, tbl) + 1L
+      // crash state: the delete committed in flight and its (seq,
+      // digest)-stamped retraction landed, the tombstone append did not
+      // (stats land FIRST by design)
+      val log = IndexLog(spark, tbl)
+      val seq = log.gen + 1L
       val sig = delIds.select(col("doc_id").cast("long").as("doc_id"))
         .distinct().select(xxhash64(col("doc_id")).as("_h"))
         .agg(expr("bit_xor(_h)")).as[Long].head()
+      log.commit(gen = seq, op = Some(IndexLog.Op("delete", sig)))
       spark.table(tbl + "_docs").join(delIds, "doc_id")
         .agg((count(lit(1)) * -1L).cast("long").as("n_docs"),
           (coalesce(sum("dl"), lit(0L)) * -1L).cast("long").as("total_dl"))
